@@ -24,8 +24,9 @@ import threading
 import uuid
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
+from dublin_smart_city_graphdb_spark.inference.rdfsplus import _ID_COLS
 from dublin_smart_city_graphdb_spark.model.schema import INFERRED_GRAPH, QUAD_SCHEMA
 from dublin_smart_city_graphdb_spark.session import local_df
 from dublin_smart_city_graphdb_spark.sources.store import QuadStore
@@ -49,6 +50,28 @@ def _norm_ruleset(name: str | None) -> str:
     if n not in ("none", "rdfsplus", "owl-horst", "owl2-rl", "custom"):
         raise ValueError(f"unknown ruleset {name!r}")
     return n
+
+
+def _id_key(field=F.col) -> Column:
+    """Canonical string key of a statement's six identity columns (graph
+    excluded; ``field(name)`` reads one): their JSON array text. Quoting,
+    escaping and NULL (``null``, never the string ``"null"``) are Spark's
+    own, so the key of a driver-resident row and of a stored row agree
+    exactly when both come from this expression."""
+    return F.to_json(F.array(*[field(c).cast("string") for c in _ID_COLS]))
+
+
+def _key_in(spark: SparkSession, keys) -> Column:
+    """``_id_key() IN keys`` as ONE ``In`` expression (``InSet`` after
+    Catalyst's OptimizeIn), built in a constant number of Py4J calls: the
+    keys cross the bridge as one NUL-joined string and are split in the
+    JVM (JSON text never holds a raw NUL). ``Column.isin`` over a Python
+    list pays two round trips per key."""
+    jvm = spark._jvm
+    parts = jvm.java.util.regex.Pattern.compile("\0").splitAsStream(
+        "\0".join(keys)
+    )
+    return Column(_id_key()._jc.isin(jvm.PythonUtils.toSeq(parts.toList())))
 
 
 class QueryAbortedError(RuntimeError):
@@ -115,16 +138,24 @@ class Repository:
             self._shacl_gate_append(df)
             self._pred_stats = None
             self._version += 1
-            if self._store:
-                self._store.write(df, mode="append")
-                self._quads = self._store.read()
-            else:
-                self._quads = (
-                    df
-                    if self._quads is None
-                    else self._quads.unionByName(df)
-                )
-                self._quads = self._quads.localCheckpoint(eager=True)
+            self._publish(df, append=True)
+
+    def _publish(self, df: DataFrame, append: bool = False) -> None:
+        """Make ``df`` (store ∪ ``df`` when ``append``) the visible
+        statement set. In memory, the checkpoint is coalesced to the
+        pre-commit partition count — a narrow dependency, no shuffle — so
+        repeated commits do not grow the partition count (every union
+        adds the batch's partitions)."""
+        if self._store:
+            self._store.write(df, mode="append" if append else "overwrite")
+            self._quads = self._store.read()
+            return
+        if self._quads is not None:
+            n = self._quads.rdd.getNumPartitions()
+            if append:
+                df = self._quads.unionByName(df)
+            df = df.coalesce(n)
+        self._quads = df.localCheckpoint(eager=True)
 
     def load_turtle_text(self, text: str, graph: str | None = None) -> int:
         """Load a Turtle document given as TEXT — the entry point network
@@ -132,7 +163,7 @@ class Repository:
         that happens to equal a server-side path cannot trigger a local
         file read (ADVICE r3 LFI surface)."""
         rows = turtle_to_rows(text, graph)
-        self._ingest(local_df(self.spark, rows, QUAD_SCHEMA))
+        self._ingest_rows(rows)
         return len(rows)
 
     def load_turtle(self, source: str, graph: str | None = None) -> int:
@@ -150,7 +181,7 @@ class Repository:
         )
 
         rows = jsonld_to_rows(text, graph, bnode_prefix=f"j{self._version}b")
-        self._ingest(local_df(self.spark, rows, QUAD_SCHEMA))
+        self._ingest_rows(rows)
         return len(rows)
 
     def load_jsonld(self, source: str, graph: str | None = None) -> int:
@@ -172,7 +203,7 @@ class Repository:
         )
 
         rows = trig_to_rows(text, graph)
-        self._ingest(local_df(self.spark, rows, QUAD_SCHEMA))
+        self._ingest_rows(rows)
         return len(rows)
 
     def load_trig(self, source: str, graph: str | None = None) -> int:
@@ -191,13 +222,60 @@ class Repository:
         )
 
         rows = rdfxml_to_rows(text, graph, bnode_prefix=f"r{self._version}b")
-        self._ingest(local_df(self.spark, rows, QUAD_SCHEMA))
+        self._ingest_rows(rows)
         return len(rows)
 
     def load_rdfxml(self, source: str, graph: str | None = None) -> int:
         """Load an RDF/XML document (path or text; trusted driver-side)."""
         text = open(source).read() if os.path.exists(source) else source
         return self.load_rdfxml_text(text, graph)
+
+    def _ingest_rows(self, rows: list) -> None:
+        """Append a driver-resident batch with set semantics, as RDF4J's
+        ``/statements`` is set-valued: a quad repeated in the batch lands
+        once, and one already stored is dropped — found by ONE key probe
+        of the store (``_held``), none on a first load."""
+        with self._write_lock:
+            batch: dict[tuple, tuple] = {}
+            for r in rows:
+                batch.setdefault(tuple(r[:7]), r)
+            if batch and self._quads is not None:
+                _, held = self._held(self.quads, [k[1:] for k in batch])
+                for g, spo in held:
+                    batch.pop((g, *spo), None)
+                if not batch:
+                    return
+            rows = list(batch.values())
+            self._ingest(local_df(self.spark, rows, QUAD_SCHEMA))
+
+    def _held(
+        self, quads: DataFrame, ids, limit: int | None = None
+    ) -> tuple[dict[tuple, str], list[tuple]] | None:
+        """Which graphs of ``quads`` hold each identity tuple of ``ids``:
+        (the ``_id_key`` of each id, the matched (g, id) pairs), or None
+        when more than ``limit`` quads match. Spark keys the ids itself:
+        they cross Py4J as one JSON literal, and Catalyst folds the keying
+        projection over a one-row local relation on the driver (no job).
+        The one job is a key-filter scan of ``quads`` with Δ-sized output."""
+        from pyspark.sql.types import ArrayType, StructType
+
+        ids = list(dict.fromkeys(ids))
+        tuples = F.from_json(
+            F.lit(json.dumps([dict(zip(_ID_COLS, i)) for i in ids])),
+            ArrayType(StructType(
+                [f for f in QUAD_SCHEMA.fields if f.name in _ID_COLS]
+            )),
+        )
+        key = dict(zip(ids, self.spark.sql("VALUES (1)").select(
+            F.transform(tuples, lambda t: _id_key(t.getField))
+        ).first()[0]))
+        probe = quads.filter(_key_in(self.spark, key.values()))
+        if limit is not None:
+            probe = probe.limit(limit + 1)
+        matched = probe.select("g", *_ID_COLS).collect()
+        if limit is not None and len(matched) > limit:
+            return None
+        return key, [(m[0], tuple(m[1:])) for m in matched]
 
     def _ingest(self, new_df: DataFrame) -> None:
         """Append a batch, maintaining the inference closure INCREMENTALLY
@@ -278,7 +356,7 @@ class Repository:
         )
         if graph is not None:
             rows = [(graph, *r[1:]) for r in rows]
-        self._ingest(local_df(self.spark, rows, QUAD_SCHEMA))
+        self._ingest_rows(rows)
         return len(rows)
 
     def load_nquads(self, path: str) -> None:
@@ -342,14 +420,7 @@ class Repository:
         inferred = materialize(explicit)
         self._pred_stats = None
         self._version += 1
-        base = explicit
-        if self._store:
-            self._store.write(
-                base.unionByName(inferred), mode="overwrite"
-            )
-            self._quads = self._store.read()
-        else:
-            self._quads = base.unionByName(inferred).localCheckpoint(eager=True)
+        self._publish(explicit.unionByName(inferred))
 
     # -- star views (property-table fast path, SURVEY §1.5) -----------------
     def materialize_star_view(
@@ -965,11 +1036,7 @@ class Repository:
                     result if inferred_new is None
                     else result.unionByName(inferred_new)
                 )
-                if self._store:
-                    self._store.write(final, mode="overwrite")
-                    self._quads = self._store.read()
-                else:
-                    self._quads = final.localCheckpoint(eager=True)
+                self._publish(final)
                 if inferred_new is None and ruleset != "none":
                     self.materialize_inference()
         finally:
@@ -978,18 +1045,19 @@ class Repository:
     def _constant_delta(
         self, explicit: DataFrame, ops: list,
         max_triples: int = 20_000, max_probe: int = 200_000,
-    ) -> tuple[list, list] | None:
-        """(deleted_spo_rows, added_spo_rows) when every op is a ground
-        data op (INSERT DATA / DELETE DATA): ONE broadcast semi-probe of
-        the store instead of the generic path's two full-store diff
-        shuffles — a 200-triple DELETE DATA against a 100 TB store must
-        not shuffle the store to learn its own delta. The probe collects
-        the store quads matching the constant triples (bounded by
-        ``max_probe``) and replays the op sequence driver-side to get
-        exact per-graph membership: a triple deleted from one graph but
-        still held by another is NOT deleted for the closure. Returns
-        None when the batch is non-constant or too large — the caller
-        falls back to the diff path."""
+    ) -> tuple[list, list, dict] | None:
+        """(deleted_spo_rows, added_spo_rows, key) when every op is a
+        ground data op (INSERT DATA / DELETE DATA); ``key`` maps each
+        constant triple's identity to its ``_id_key``. ONE key-filter
+        probe of the store (``_held``) replaces the generic path's two
+        full-store diff shuffles — a 200-triple DELETE DATA against a
+        100 TB store must not shuffle the store to learn its own delta.
+        The probe collects the store quads holding the constant triples
+        (bounded by ``max_probe``) and replays the op sequence
+        driver-side to get exact per-graph membership: a triple deleted
+        from one graph but still held by another is NOT deleted for the
+        closure. Returns None when the batch is non-constant or too large
+        — the caller falls back to the diff path."""
         from dublin_smart_city_graphdb_spark.sparql import ast as A
         from dublin_smart_city_graphdb_spark.sparql.update import (
             _ground_rows,
@@ -1002,34 +1070,17 @@ class Repository:
         grounded = [(op, _ground_rows(op.quads)) for op in ops]
         if sum(len(r) for _, r in grounded) > max_triples:
             return None
-        id_cols = ["s", "p", "o_kind", "o_lex", "o_dtype", "o_lang"]
         spo_of: dict[tuple, tuple] = {}
         for _, rows in grounded:
             for r in rows:
                 spo_of[tuple(r[1:7])] = tuple(r[1:])
-        from pyspark.sql.types import StructType
-
-        id_schema = StructType(
-            [f for f in QUAD_SCHEMA.fields if f.name in id_cols]
-        )
-        const_df = self.spark.createDataFrame(
-            [list(k) for k in spo_of], id_schema
-        )
-        e = explicit.select("g", *id_cols).alias("q")
-        cond = None
-        for c in id_cols:
-            clause = F.col(f"q.{c}").eqNullSafe(F.col(f"c.{c}"))
-            cond = clause if cond is None else (cond & clause)
-        matched = (
-            e.join(F.broadcast(const_df.alias("c")), cond, "left_semi")
-            .limit(max_probe + 1)
-            .collect()
-        )
-        if len(matched) > max_probe:
+        held = self._held(explicit, list(spo_of), limit=max_probe)
+        if held is None:
             return None
+        key, matched = held
         present: dict[tuple, set] = {k: set() for k in spo_of}
-        for row in matched:
-            present[tuple(row[1:])].add(row[0])
+        for g, rid in matched:
+            present[rid].add(g)
         old_has = {k for k, v in present.items() if v}
         for op, rows in grounded:
             delete = isinstance(op, A.DeleteDataOp)
@@ -1043,32 +1094,24 @@ class Repository:
         return (
             [spo_of[k] for k in old_has - new_has],
             [spo_of[k] for k in new_has - old_has],
+            key,
         )
 
-    @staticmethod
-    def _anti_literal(df: DataFrame, rows: list) -> DataFrame:
-        """``df`` minus a small DRIVER-KNOWN row set, as a pure map-side
-        literal filter (round 12). The lazy broadcast anti-join it
-        replaces re-broadcast the tiny set on EVERY reference of the
-        store view inside every fixpoint-round plan — ~38 broadcast
-        jobs for one 12-triple DELETE. Identity = the 6 id columns,
-        null-safe, exactly like inference.dred._anti."""
-        id_types = {
-            "s": "string", "p": "string", "o_kind": "tinyint",
-            "o_lex": "string", "o_dtype": "string", "o_lang": "string",
-        }
-        any_match = None
-        for r in rows:
-            c = None
-            for (col, typ), v in zip(id_types.items(), r[:6]):
-                lit = (
-                    F.lit(v) if v is not None
-                    else F.lit(None).cast(typ)
-                )
-                cl = F.col(col).eqNullSafe(lit)
-                c = cl if c is None else (c & cl)
-            any_match = c if any_match is None else (any_match | c)
-        return df.filter(~any_match)
+    def _anti_literal(
+        self, df: DataFrame, rows: list, key: dict
+    ) -> DataFrame:
+        """``df`` minus a DRIVER-KNOWN row set, as one map-side
+        ``NOT _id_key() IN (…)`` filter (``key`` maps each row's identity
+        to its key, see ``_constant_delta``). No join, so no broadcast is
+        re-run by each plan that reads the view, and the filter costs the
+        same few Py4J calls and one ``InSet`` for 1 or 20,000 rows.
+        Identity = the 6 id columns, null-safe, like
+        inference.dred._anti."""
+        if not rows:
+            return df
+        return df.filter(
+            ~_key_in(self.spark, [key[tuple(r[:6])] for r in rows])
+        )
 
     def _maintain_closure(
         self, q: DataFrame, explicit: DataFrame, result: DataFrame,
@@ -1077,15 +1120,19 @@ class Repository:
         """Maintained inferred quads after an arbitrary SPARQL-Update /
         transaction batch, or None → caller re-materializes fully.
 
-        Diffs the explicit SPO projections (two anti-joins — one shuffle
-        each, against the full fixpoint's ≤20 rule rounds the old path
-        re-ran per update), then routes the deleted side through the
-        ruleset's DRed retract (inference/dred.py — Δ-seeded
+        Learns the explicit SPO delta, then routes the deleted side
+        through the ruleset's DRed retract (inference/dred.py — Δ-seeded
         overdeletion, one rederive round) and the added side through its
-        Δ-seeded insert fixpoint. The SPO projection is the right diff
-        domain: inference reads the union of all explicit graphs, so a
-        triple removed from one graph but still present in another is
-        not a deletion for the closure."""
+        Δ-seeded insert fixpoint. A ground batch (INSERT/DELETE DATA up
+        to ``_constant_delta``'s bound) learns its delta from one key
+        probe, and every view it derives — the store minus the deleted
+        triples, the inferred set minus the added ones — is one key
+        filter (``_anti_literal``), whatever the batch size. Any other
+        batch diffs the explicit SPO projections (two anti-joins, one
+        shuffle each). The SPO projection is the right diff domain:
+        inference reads the union of all explicit graphs, so a triple
+        removed from one graph but still present in another is not a
+        deletion for the closure."""
         from dublin_smart_city_graphdb_spark.inference import horst, owl2rl
         from dublin_smart_city_graphdb_spark.inference.dred import _anti
         from dublin_smart_city_graphdb_spark.inference.rdfsplus import (
@@ -1097,47 +1144,28 @@ class Repository:
         from pyspark.sql.types import StructType
 
         spo_schema = StructType(QUAD_SCHEMA.fields[1:])
+        # fresh_ids on every frame handed downstream: the maintenance
+        # unions these with one another, and checkpoint-descended frames
+        # sharing attribute ids trip a Spark optimizer crash (ckpt.py)
+        inferred_old = fresh_ids(
+            q.filter(q.g == INFERRED_GRAPH).select(
+                F.lit(INFERRED_GRAPH).alias("g"), *_SPO_COLS
+            ).localCheckpoint(eager=True)
+        )
         const = self._constant_delta(explicit, ops)
-        add_rows_lit = None
         if const is not None:
-            # ground data-op batch: the delta is known from ONE broadcast
-            # probe — no full-store diff shuffles at all
-            del_rows, add_rows = const
-            if 0 < len(add_rows) <= 256:
-                add_rows_lit = add_rows
+            # ground data-op batch: the delta is known from ONE key probe
+            # — no full-store diff shuffles at all
+            del_rows, add_rows, key = const
             no_del, no_add = not del_rows, not add_rows
             deleted = local_df(self.spark, del_rows, spo_schema)
             added = local_df(self.spark, add_rows, spo_schema)
-            inferred_old = fresh_ids(
-                q.filter(q.g == INFERRED_GRAPH).select(
-                    F.lit(INFERRED_GRAPH).alias("g"), *_SPO_COLS
-                ).localCheckpoint(eager=True)
-            )
-            if no_del and no_add:
-                return inferred_old
-            # LAZY map-side view: the store minus the tiny deleted set —
-            # no full-store shuffle or copy; duplicate SPO rows across
-            # graphs are tolerated downstream (dred.retract). The rows
-            # are driver-known, so small batches filter by a literal
-            # predicate (zero joins/broadcasts — see _anti_literal);
-            # bigger ones keep the broadcast anti-join.
-            if 0 < len(del_rows) <= 256:
-                mid_spo = self._anti_literal(
-                    explicit.select(*_SPO_COLS), del_rows
-                )
-            else:
-                mid_spo = _anti(
-                    explicit.select(*_SPO_COLS), deleted, broadcast=True
-                )
         else:
             # checkpoint both projections: `result`'s plan CONTAINS
             # `explicit` as a subtree (a MODIFY op's WHERE runs over the
             # store), so the diff anti-joins would otherwise be ambiguous
             # self-joins — and the maintenance makes several passes over
-            # each side anyway. fresh_ids on every frame handed
-            # downstream: the maintenance unions these with one another,
-            # and checkpoint-descended frames sharing attribute ids trip
-            # a Spark optimizer crash (ckpt.py)
+            # each side anyway
             old_spo = (
                 explicit.select(*_SPO_COLS).distinct()
                 .localCheckpoint(eager=True)
@@ -1152,14 +1180,18 @@ class Repository:
             added = fresh_ids(
                 _anti(new_spo, old_spo).localCheckpoint(eager=True)
             )
-            inferred_old = fresh_ids(
-                q.filter(q.g == INFERRED_GRAPH).select(
-                    F.lit(INFERRED_GRAPH).alias("g"), *_SPO_COLS
-                ).localCheckpoint(eager=True)
-            )
             no_del, no_add = deleted.isEmpty(), added.isEmpty()
-            if no_del and no_add:
-                return inferred_old  # no net explicit change
+        if no_del and no_add:
+            return inferred_old  # no net explicit change
+        if const is not None:
+            # LAZY map-side view: the store minus the deleted set by one
+            # key filter — no full-store shuffle, copy or join; duplicate
+            # SPO rows across graphs are tolerated downstream
+            # (dred.retract)
+            mid_spo = self._anti_literal(
+                explicit.select(*_SPO_COLS), del_rows, key
+            )
+        else:
             mid_spo = fresh_ids(
                 _anti(new_spo, added).localCheckpoint(eager=True)
             )
@@ -1192,9 +1224,9 @@ class Repository:
         # an added explicit triple that was previously INFERRED must leave
         # the inferred set (a full rebuild seeds `known` with the explicit
         # store, so it would never re-derive it)
-        if add_rows_lit is not None:
+        if const is not None:
             return self._anti_literal(
-                inferred_mid, add_rows_lit
+                inferred_mid, add_rows, key
             ).unionByName(extra)
         return _anti(inferred_mid, added).unionByName(extra)
 

@@ -142,31 +142,22 @@ def make_round_fn(spark, parsed: list, variants: list, static_df=None):
     )
     from dublin_smart_city_graphdb_spark.inference.rdfsplus import (
         _round,
-        _schema_ctx,
+        _schema_cache,
         _SPO_COLS,
     )
 
-    # schema-context cache for the built-in batch: valid through
-    # schema-free delta rounds, invalidated by any full round (see
-    # rdfsplus._cached_round_fn)
-    ctx_box: dict = {}
+    # schema context of the built-in batch, shared as in
+    # rdfsplus._cached_round_fn
+    ctx_for = _schema_cache()
 
-    def round_fn(known: DataFrame, inst) -> DataFrame:
+    def round_fn(known: DataFrame, inst, same_schema: bool = False):
         from dublin_smart_city_graphdb_spark.sparql.compiler import (
             QueryCompiler,
         )
 
-        if inst is None:
-            # full round: rebuild the ctx from the current statement set —
-            # even full rounds then skip dead rule branches and share one
-            # schema extraction (see rdfsplus._cached_round_fn)
-            ctx_box.clear()
-            ctx_box["ctx"] = _schema_ctx(known)
-            out = _round(known, None, ctx=ctx_box["ctx"])
-        else:
-            if "ctx" not in ctx_box:
-                ctx_box["ctx"] = _schema_ctx(known)
-            out = _round(known, inst, ctx=ctx_box["ctx"])
+        out = _round(
+            known, inst, ctx=ctx_for(known, inst is None, same_schema)
+        )
         if inst is None:
             view = known.select(
                 F.lit(None).cast("string").alias("g"), *_SPO_COLS

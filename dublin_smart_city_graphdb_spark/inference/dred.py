@@ -67,14 +67,9 @@ def _semi(base: DataFrame, probe: DataFrame) -> DataFrame:
     )
 
 
-def _anti(
-    base: DataFrame, probe: DataFrame, broadcast: bool = False
-) -> DataFrame:
-    probe = probe.select(*_ID_COLS)
-    if broadcast:
-        probe = F.broadcast(probe)
+def _anti(base: DataFrame, probe: DataFrame) -> DataFrame:
     return base.alias("b").join(
-        probe.alias("p"),
+        probe.select(*_ID_COLS).alias("p"),
         on=_nullsafe_cond("b", "p"),
         how="left_anti",
     )
@@ -102,14 +97,24 @@ def retract(
     under-deletion would silently KEEP unsupported inferences, so the
     fallback is the only sound exit.
 
+    One schema extraction serves the whole call: the overdeletion
+    rounds build the rule schema from the old view, and the rederive
+    round reuses it (``round_fn(..., same_schema=True)``) — the
+    survivors hold exactly the old view's schema triples, since a
+    schema-touching deleted or overdeleted triple has already returned
+    ``None``.
+
     Scale note: this function materializes NO full-store copy. The
     unioned views (old view, survivors) stay LAZY — their members are
     mutually disjoint so no distinct is needed, and duplicate SPO rows
     (a triple asserted in several graphs) are tolerated: they only
     duplicate rule candidates, which every consumer dedups
     (``dropDuplicates`` on candidates, semi-join probes, ``_fixpoint``'s
-    anti-join). Callers should pass frames that are cheap to rescan
-    (checkpoint-backed or map-side projections of one)."""
+    anti-join). Callers should pass frames that are cheap to rescan and
+    cheap to plan: checkpoint-backed, or the store under one map-side
+    filter (the engine's ground-batch path hands in the store minus the
+    deleted triples as a single key-set filter, which every round's plan
+    re-reads)."""
     from dublin_smart_city_graphdb_spark.plans.ckpt import CheckpointTracker
 
     if touches_schema(deleted):
@@ -211,7 +216,12 @@ def retract(
     from dublin_smart_city_graphdb_spark.plans.ckpt import fresh_ids
 
     red0 = fresh_ids(
-        _semi(candidates, round_fn(survive, None).dropDuplicates(_ID_COLS))
+        _semi(
+            candidates,
+            round_fn(survive, None, same_schema=True).dropDuplicates(
+                _ID_COLS
+            ),
+        )
         .localCheckpoint(eager=True)
     )
     new_inferred = remaining

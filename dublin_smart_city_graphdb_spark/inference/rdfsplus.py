@@ -72,15 +72,6 @@ def _swap_so(df: DataFrame, new_p_col) -> DataFrame:
     )
 
 
-def _schema_pairs(all_df: DataFrame, pred: str) -> DataFrame:
-    """(a, b) pairs of a schema predicate, IRIs only — always broadcast."""
-    return F.broadcast(
-        all_df.filter((F.col("p") == pred) & (F.col("o_kind") == KIND_IRI))
-        .select(F.col("s").alias("a"), F.col("o_lex").alias("b"))
-        .distinct()
-    )
-
-
 # Hard cap on the driver-side schema collect (round 12): the schema
 # context is bounded by the ONTOLOGY by design; a store whose instance
 # data itself carries schema vocabulary must fail loudly rather than
@@ -207,19 +198,26 @@ def _schema_ctx(facts: DataFrame) -> dict:
     def both(rows):
         return sorted(set(rows) | {(b, a) for a, b in rows})
 
+    # broadcast frames only for the tables too large to inline (see
+    # _SCHEMA_LIT_MAX): _round reads a frame only when the literal path
+    # declines the table, so building all twelve paid ~12 local frames'
+    # Py4J traffic per extraction for nothing
+    frames = {
+        "subp": (subp, pair_df), "subc": (subc, pair_df),
+        "dom": (dom, pair_df), "rng": (rng, pair_df),
+        "inv_both": (both(inv), pair_df), "eqp_both": (both(eqp), pair_df),
+        "eqc_both": (both(eqc), pair_df), "same_pairs": (same, pair_df),
+        "sym_props": (sym, lambda r: prop_df(r, "a")),
+        "trans_props": (trans, lambda r: prop_df(r, "tp")),
+        "fun_props": (fun, lambda r: prop_df(r, "fp")),
+        "ifun_props": (ifun, lambda r: prop_df(r, "fp")),
+    }
     ctx = {
-        "subp": pair_df(subp),
-        "subc": pair_df(subc),
-        "dom": pair_df(dom),
-        "rng": pair_df(rng),
-        "inv_both": pair_df(both(inv)),
-        "eqp_both": pair_df(both(eqp)),
-        "eqc_both": pair_df(both(eqc)),
-        "same_pairs": pair_df(same),
-        "sym_props": prop_df(sym, "a"),
-        "trans_props": prop_df(trans, "tp"),
-        "fun_props": prop_df(fun, "fp"),
-        "ifun_props": prop_df(ifun, "fp"),
+        name: build(rows)
+        for name, (rows, build) in frames.items()
+        if len(rows) > _SCHEMA_LIT_MAX
+    }
+    ctx.update({
         # exact per-relation guards: a rule whose schema side is empty
         # cannot produce a row — _round skips its joins outright
         "has_subp": bool(subp),
@@ -252,7 +250,7 @@ def _schema_ctx(facts: DataFrame) -> dict:
         "trans_list": [r[0] for r in trans],
         "fun_list": [r[0] for r in fun],
         "ifun_list": [r[0] for r in ifun],
-    }
+    })
     return ctx
 
 
@@ -278,12 +276,10 @@ def _pair_map_col(rows):
     return F.create_map(*entries)
 
 
-def _round(
-    all_df: DataFrame, inst: DataFrame | None = None, ctx: dict | None = None,
-) -> DataFrame:
+def _round(all_df: DataFrame, inst: DataFrame | None, ctx: dict) -> DataFrame:
     """One application of every RDFS-Plus rule; returns candidate triples
-    (possibly already known). ``ctx`` (see ``_schema_ctx``) supplies
-    pre-materialized schema tables for loops whose schema is frozen.
+    (possibly already known). ``ctx`` (see ``_schema_ctx``) supplies the
+    schema tables, extracted once per loop (``_schema_cache``).
 
     Semi-naive evaluation: ``inst`` is the instance-side input for the
     high-volume rules (subPropertyOf use, domain/range, inverse/equivalent
@@ -309,25 +305,13 @@ def _round(
     delta = inst  # None → full round
     if inst is None:
         inst = all_df
-    if ctx is None:
-        ctx = {}
-
-    def _get(key, build):
-        return ctx[key] if key in ctx else build()
-
-    def _has(key):
-        # exact guard when a collected ctx supplies it; True (evaluate the
-        # rule) when running without a ctx — never unsound, only slower
-        return ctx.get(key, True)
 
     def _lit(key):
-        # raw driver-side rows when the ctx collected them AND the table
-        # is small enough for the literal-expression path (see
-        # _SCHEMA_LIT_MAX) — None falls back to the broadcast-join path
-        rows = ctx.get(key)
-        if rows is not None and len(rows) <= _SCHEMA_LIT_MAX:
-            return rows
-        return None
+        # raw driver-side rows when the table is small enough for the
+        # literal-expression path (see _SCHEMA_LIT_MAX) — None selects the
+        # broadcast-join path over the ctx's frame of the same table
+        rows = ctx[key]
+        return rows if len(rows) <= _SCHEMA_LIT_MAX else None
 
     def _local_pairs(rows, pred):
         # driver-computed schema-level rule output (pure-schema rules run
@@ -339,7 +323,7 @@ def _round(
         return _type_triple(df, "sa", "sb").withColumn("p", F.lit(pred))
 
     # rdfs7: subPropertyOf use  (schema side broadcast or literal map)
-    if _has("has_subp"):
+    if ctx["has_subp"]:
         subp_rows = _lit("subp_rows")
         if subp_rows is not None:
             outs.append(
@@ -353,7 +337,7 @@ def _round(
                 )
             )
         else:
-            subp = _get("subp", lambda: _schema_pairs(facts, _SUBPROP))
+            subp = ctx["subp"]
             outs.append(
                 inst.join(subp, inst.p == subp.a)
                 .select(
@@ -374,7 +358,7 @@ def _round(
                 if pairs:
                     outs.append(_local_pairs(pairs, _SUBPROP))
             else:
-                subp = _get("subp", lambda: _schema_pairs(facts, _SUBPROP))
+                subp = ctx["subp"]
                 sp_trans = (
                     subp.alias("x")
                     .join(subp.alias("y"), F.col("x.b") == F.col("y.a"))
@@ -385,7 +369,7 @@ def _round(
                     .withColumn("p", F.lit(_SUBPROP))
                 )
     # rdfs11: subClassOf transitivity (schema-level; full rounds only)
-    if _has("has_subc"):
+    if ctx["has_subc"]:
         subc_rows = _lit("subc_rows")
         if delta is None:
             if subc_rows is not None:
@@ -398,7 +382,7 @@ def _round(
                 if pairs:
                     outs.append(_local_pairs(pairs, _SUBCLASS))
             else:
-                subc = _get("subc", lambda: _schema_pairs(facts, _SUBCLASS))
+                subc = ctx["subc"]
                 sc_trans = (
                     subc.alias("x")
                     .join(subc.alias("y"), F.col("x.b") == F.col("y.a"))
@@ -423,7 +407,7 @@ def _round(
                 )
             )
         else:
-            subc = _get("subc", lambda: _schema_pairs(facts, _SUBCLASS))
+            subc = ctx["subc"]
             outs.append(
                 _type_triple(
                     types.join(subc, types.o_lex == subc.a).select(
@@ -433,7 +417,7 @@ def _round(
                 )
             )
     # rdfs2/3: domain / range
-    if _has("has_dom"):
+    if ctx["has_dom"]:
         dom_rows = _lit("dom_rows")
         if dom_rows is not None:
             outs.append(
@@ -448,7 +432,7 @@ def _round(
                 )
             )
         else:
-            dom = _get("dom", lambda: _schema_pairs(facts, _DOMAIN))
+            dom = ctx["dom"]
             outs.append(
                 _type_triple(
                     inst.join(dom, inst.p == dom.a).select(
@@ -457,7 +441,7 @@ def _round(
                     "ss", "cc",
                 )
             )
-    if _has("has_rng"):
+    if ctx["has_rng"]:
         rng_rows = _lit("rng_rows")
         if rng_rows is not None:
             outs.append(
@@ -472,7 +456,7 @@ def _round(
                 )
             )
         else:
-            rng = _get("rng", lambda: _schema_pairs(facts, _RANGE))
+            rng = ctx["rng"]
             outs.append(
                 _type_triple(
                     inst.filter(F.col("o_kind") != 2)
@@ -482,13 +466,7 @@ def _round(
                 )
             )
     # inverseOf (both directions) + equivalentProperty (both directions)
-    def _both(pred):
-        base = _schema_pairs(facts, pred)
-        return base.unionByName(
-            base.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-
-    if _has("has_inv"):
+    if ctx["has_inv"]:
         inv_rows = _lit("inv_both_rows")
         if inv_rows is not None:
             fi = inst.select(
@@ -496,10 +474,10 @@ def _round(
                 F.explode(_pair_map_col(inv_rows)[F.col("p")]).alias("b"),
             )
         else:
-            inv_both = _get("inv_both", lambda: _both(_INVERSE))
+            inv_both = ctx["inv_both"]
             fi = inst.join(F.broadcast(inv_both), inst.p == F.col("a"))
         outs.append(_swap_so(fi, F.col("b")))
-    if _has("has_eqp"):
+    if ctx["has_eqp"]:
         eqp_rows = _lit("eqp_both_rows")
         if eqp_rows is not None:
             outs.append(
@@ -513,7 +491,7 @@ def _round(
                 )
             )
         else:
-            eqp_both = _get("eqp_both", lambda: _both(_EQ_PROP))
+            eqp_both = ctx["eqp_both"]
             fe = inst.join(F.broadcast(eqp_both), inst.p == F.col("a"))
             outs.append(
                 fe.select(
@@ -523,12 +501,12 @@ def _round(
             )
     # equivalentClass → mutual subClassOf (handled through rdfs9 next
     # round; schema-level — full rounds only)
-    if delta is None and _has("has_eqc"):
+    if delta is None and ctx["has_eqc"]:
         eqc_rows = _lit("eqc_both_rows")
         if eqc_rows is not None:
             outs.append(_local_pairs(list(eqc_rows), _SUBCLASS))
         else:
-            eqc_both = _get("eqc_both", lambda: _both(_EQ_CLASS))
+            eqc_both = ctx["eqc_both"]
             outs.append(
                 _type_triple(
                     eqc_both.select(
@@ -538,18 +516,14 @@ def _round(
                 ).withColumn("p", F.lit(_SUBCLASS))
             )
     # SymmetricProperty
-    if _has("has_sym"):
+    if ctx["has_sym"]:
         sym_list = _lit("sym_list")
         if sym_list is not None:
             outs.append(
                 _swap_so(inst.filter(F.col("p").isin(sym_list)), F.col("p"))
             )
         else:
-            sym_props = _get("sym_props", lambda: F.broadcast(
-                facts.filter(
-                    (F.col("p") == RDF_TYPE) & (F.col("o_lex") == _SYMMETRIC)
-                ).select(F.col("s").alias("a")).distinct()
-            ))
+            sym_props = ctx["sym_props"]
             outs.append(
                 _swap_so(
                     inst.join(sym_props, inst.p == F.col("a")), F.col("p")
@@ -558,7 +532,7 @@ def _round(
     # TransitiveProperty: one join step per round (outer loop closes it).
     # tfacts deliberately comes from the CURRENT fact set, never the ctx
     # cache — the transitive-fact table grows with the fixpoint
-    has_trans = ctx.get("has_trans", True)
+    has_trans = ctx["has_trans"]
     trans_list = _lit("trans_list") if has_trans else None
     if not has_trans:
         trans_props = None
@@ -569,11 +543,7 @@ def _round(
             F.col("o_kind") != 2
         )
     else:
-        trans_props = _get("trans_props", lambda: F.broadcast(
-            facts.filter(
-                (F.col("p") == RDF_TYPE) & (F.col("o_lex") == _TRANSITIVE)
-            ).select(F.col("s").alias("tp")).distinct()
-        ))
+        trans_props = ctx["trans_props"]
         tfacts = facts.join(trans_props, facts.p == F.col("tp")).filter(
             F.col("o_kind") != 2
         )
@@ -618,12 +588,12 @@ def _round(
     # is inst-side (a delta can carry sameAs only into FULL rounds — it is
     # a schema predicate — so in delta rounds `same` is provably empty and
     # the guard also covers stores with no sameAs at all).
-    if _has("has_same") or delta is None:
+    if ctx["has_same"] or delta is None:
         same = inst.filter(
             (F.col("p") == _SAME_AS) & (F.col("o_kind") == KIND_IRI)
         )
         outs.append(_swap_so(same, F.col("p")))
-    if _has("has_same"):
+    if ctx["has_same"]:
         same_rows = _lit("same_pairs_rows")
         if delta is None:
             # sameAs transitivity over the pair table (sameAs is in
@@ -639,9 +609,7 @@ def _round(
                 if pairs:
                     outs.append(_local_pairs(pairs, _SAME_AS))
             else:
-                same_pairs = _get(
-                    "same_pairs", lambda: _schema_pairs(facts, _SAME_AS)
-                )
+                same_pairs = ctx["same_pairs"]
                 sa_trans = (
                     same_pairs.alias("x")
                     .join(same_pairs.alias("y"), F.col("x.b") == F.col("y.a"))
@@ -664,9 +632,7 @@ def _round(
                 )
             )
         else:
-            same_pairs = _get(
-                "same_pairs", lambda: _schema_pairs(facts, _SAME_AS)
-            )
+            same_pairs = ctx["same_pairs"]
             outs.append(
                 inst.join(same_pairs, inst.s == same_pairs.a)
                 .select(
@@ -675,7 +641,7 @@ def _round(
                 )
             )
     # Functional / InverseFunctional → sameAs
-    has_fun = ctx.get("has_fun", True)
+    has_fun = ctx["has_fun"]
     fun_list = _lit("fun_list") if has_fun else None
     if not has_fun:
         fun_props = None
@@ -686,11 +652,7 @@ def _round(
             F.col("o_kind") == KIND_IRI
         )
     else:
-        fun_props = _get("fun_props", lambda: F.broadcast(
-            facts.filter(
-                (F.col("p") == RDF_TYPE) & (F.col("o_lex") == _FUNCTIONAL)
-            ).select(F.col("s").alias("fp")).distinct()
-        ))
+        fun_props = ctx["fun_props"]
         ffacts = facts.join(fun_props, facts.p == F.col("fp")).filter(
             F.col("o_kind") == KIND_IRI
         )
@@ -721,7 +683,7 @@ def _round(
             )
         outs.append(_fun_pairs(fdelta, ffacts))
         outs.append(_fun_pairs(ffacts, fdelta))
-    has_ifun = ctx.get("has_ifun", True)
+    has_ifun = ctx["has_ifun"]
     ifun_list = _lit("ifun_list") if has_ifun else None
     if not has_ifun:
         ifun_props = None
@@ -730,11 +692,7 @@ def _round(
         ifun_props = None
         iffacts = facts.filter(F.col("p").isin(ifun_list))
     else:
-        ifun_props = _get("ifun_props", lambda: F.broadcast(
-            facts.filter(
-                (F.col("p") == RDF_TYPE) & (F.col("o_lex") == _INV_FUNCTIONAL)
-            ).select(F.col("s").alias("fp")).distinct()
-        ))
+        ifun_props = ctx["ifun_props"]
         iffacts = facts.join(ifun_props, facts.p == F.col("fp"))
 
     def _ifun_pairs(left: DataFrame, right: DataFrame) -> DataFrame:
@@ -811,28 +769,35 @@ def materialize_incremental(
     )
 
 
-def _cached_round_fn():
-    """The built-in rule batch with schema-context caching: consecutive
-    delta rounds reuse one ``_schema_ctx`` extraction (the schema cannot
-    change through schema-free deltas); any FULL round invalidates the
-    cache, because full rounds run exactly when the schema may have
-    changed."""
-    ctx_box: dict = {}
+def _schema_cache():
+    """``ctx_for(known, full, same_schema=False)``: the ``_schema_ctx`` a
+    round of one loop runs with. Built on first use and reused by
+    schema-free delta rounds (their schema subset is identical by the
+    touches-schema contract); a FULL round rebuilds it from its statement
+    set — full rounds run exactly when the schema may have changed —
+    unless the caller vouches that it has not (``same_schema``: DRed's
+    rederive round, whose survivors hold exactly the old view's schema).
+    ``ctx_for.box`` holds the current ctx."""
+    box: dict = {}
 
-    def round_fn(known: DataFrame, inst) -> DataFrame:
-        if inst is None:
-            # full round: the schema MAY have changed — rebuild the ctx
-            # from the current statement set and use it, so even full
-            # rounds skip dead rule branches and share one schema
-            # extraction instead of 12 per-rule store scans. Subsequent
-            # schema-free delta rounds reuse it (their schema subset is
-            # identical by the touches-schema contract).
-            ctx_box.clear()
-            ctx_box["ctx"] = _schema_ctx(known)
-            return _round(known, None, ctx=ctx_box["ctx"])
-        if "ctx" not in ctx_box:
-            ctx_box["ctx"] = _schema_ctx(known)
-        return _round(known, inst, ctx=ctx_box["ctx"])
+    def ctx_for(known: DataFrame, full: bool, same_schema: bool = False):
+        if "ctx" not in box or (full and not same_schema):
+            box["ctx"] = _schema_ctx(known)
+        return box["ctx"]
+
+    ctx_for.box = box
+    return ctx_for
+
+
+def _cached_round_fn():
+    """The built-in rule batch with one schema-context extraction shared
+    by every round that may share it (``_schema_cache``)."""
+    ctx_for = _schema_cache()
+
+    def round_fn(known: DataFrame, inst, same_schema: bool = False):
+        return _round(
+            known, inst, ctx=ctx_for(known, inst is None, same_schema)
+        )
 
     def can_rederive(cands: DataFrame) -> bool:
         """Could ANY candidate be the head of some rule instantiation
@@ -840,7 +805,7 @@ def _cached_round_fn():
         round entirely — the common leaf-delete case then costs pure
         Δ-work. Conservative: unknown ⇒ True. Sound because the schema
         tables come from the OLD view, a superset of the survivors'."""
-        ctx = ctx_box.get("ctx")
+        ctx = ctx_for.box.get("ctx")
         if ctx is None:
             return True
         # the schema subset was collected once when the ctx was built;

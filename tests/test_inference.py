@@ -220,3 +220,31 @@ def test_incremental_late_schema_refires_on_old_data(spark):
     one = eng.create_repository("inc_late_oneshot", ruleset="rdfsplus")
     one.load_turtle(ONTOLOGY_TTL + BATCH1_TTL + LATE_SCHEMA_TTL)
     assert _all_quads(r) == _all_quads(one)
+
+
+def test_broadcast_schema_path_matches_literal_path(spark, monkeypatch):
+    """Schema tables above SPARK_GRAFT_SCHEMA_LIT_MAX join as broadcast
+    frames instead of inlining as literals; both paths derive the same
+    closure, for every rule family."""
+    from dublin_smart_city_graphdb_spark.inference import rdfsplus
+
+    ttl = """
+        ex:p rdfs:subPropertyOf ex:q . ex:q rdfs:subPropertyOf ex:r .
+        ex:A rdfs:subClassOf ex:B . ex:B rdfs:subClassOf ex:C .
+        ex:p rdfs:domain ex:A . ex:p rdfs:range ex:D .
+        ex:p owl:inverseOf ex:pinv . ex:q owl:equivalentProperty ex:q2 .
+        ex:D owl:equivalentClass ex:E .
+        ex:sym a owl:SymmetricProperty . ex:tr a owl:TransitiveProperty .
+        ex:fun a owl:FunctionalProperty .
+        ex:ifun a owl:InverseFunctionalProperty .
+        ex:x ex:p ex:y . ex:x ex:sym ex:z .
+        ex:a ex:tr ex:b . ex:b ex:tr ex:c . ex:c ex:tr ex:d .
+        ex:m ex:fun ex:n1 . ex:m ex:fun ex:n2 .
+        ex:k1 ex:ifun ex:v . ex:k2 ex:ifun ex:v .
+        ex:y owl:sameAs ex:y2 .
+    """
+    literal = infer(spark, ttl)
+    monkeypatch.setattr(rdfsplus, "_SCHEMA_LIT_MAX", 0)
+    assert infer(spark, ttl + "\n") == literal
+    assert (T + "x", RDF_TYPE, T + "C") in literal
+    assert (T + "a", T + "tr", T + "d") in literal
