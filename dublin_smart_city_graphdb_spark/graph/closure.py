@@ -1,13 +1,24 @@
-"""Iterative-fixpoint graph algorithms on edge DataFrames.
+"""Graph algorithms on edge DataFrames.
 
 Used for SPARQL property paths ``+``/``*`` (SURVEY §2.2 P7), the
-owl:TransitiveProperty inference rule, and owl:sameAs equivalence classes
-(SURVEY §2.8). Semi-naive evaluation: each round joins only the *delta*
-(paths discovered last round) against the base edges, so round k costs
-O(|delta_k| ⋈ |E|), not O(|paths| ⋈ |E|) — the SURVEY §7 "hard part (6)"
-requirement. ``localCheckpoint`` truncates lineage so plans don't grow
-exponentially with iterations (critical at scale: a 20-round closure
-otherwise builds a 2^20-node plan).
+owl:TransitiveProperty inference rule, owl:sameAs equivalence classes
+(SURVEY §2.8) and the pipeline's graph operators. Two loop shapes:
+
+- **Growing sets** — ``transitive_closure`` and ``bfs_hops`` — run on
+  ``plans.ckpt.semi_naive``, the engine's one semi-naive loop: each round
+  joins only the *delta* (pairs or nodes discovered last round) against
+  the base edges, so round k costs O(|delta_k| ⋈ |E|), not O(|paths| ⋈
+  |E|) — the SURVEY §7 "hard part (6)" requirement — with one probe job
+  per round. A set still growing at ``max_iterations`` raises instead of
+  returning a truncated answer.
+- **State-replace kernels** — PageRank, connected components, SSSP, HITS,
+  label propagation, k-core — replace their per-node state each round
+  and checkpoint every generation through ``CheckpointTracker``, freeing
+  its predecessor.
+
+``localCheckpoint`` truncates lineage so plans don't grow exponentially
+with iterations (critical at scale: a 20-round closure otherwise builds a
+2^20-node plan).
 """
 
 from __future__ import annotations
@@ -15,7 +26,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..plans.ckpt import CheckpointTracker
+from ..plans.ckpt import CheckpointTracker, semi_naive
 
 
 def transitive_closure(
@@ -29,7 +40,9 @@ def transitive_closure(
     """All pairs (a, b) with a path a →+ b (SPARQL ``p+`` semantics).
 
     Semi-naive: delta ⋈ edges per round, de-duplicated against the
-    accumulated path set before the next round.
+    accumulated path set before the next round. Raises ``RuntimeError``
+    if new pairs still appear after ``max_iterations`` rounds (a path
+    longer than the budget).
 
     ``seeds`` (a one-column DataFrame of node ids, src-typed) restricts
     evaluation to pairs whose SOURCE is a seed: the fixpoint starts from
@@ -49,72 +62,30 @@ def transitive_closure(
     not), avoiding a driver OOM at exactly the scale the seeding
     optimization targets."""
     tr = CheckpointTracker(edges)
-    base = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    base, base_ids = tr.checkpoint(base)
-
+    base, base_ids = tr.checkpoint(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .distinct()
+    )
+    init = base
     if seeds is not None:
         seed_col = seeds.columns[0]
         seed_df = seeds.select(F.col(seed_col).alias("src")).distinct()
         if broadcast_seeds:
             seed_df = F.broadcast(seed_df)
-        init = seed_df.join(base, "src")
-        init, init_ids = tr.checkpoint(init)
-        paths = init
-        delta = init
-    else:
-        paths = base
-        delta = base
-    # checkpoint generations currently referenced by the lazy `paths`
-    # union (deltas since the last compaction + the last compaction)
-    union_ids: set = set()
-    rounds_since_compact = 0
-    for _ in range(max_iterations):
-        grown = (
-            delta.alias("d")
-            .join(base.alias("e"), F.col("d.dst") == F.col("e.src"))
-            .select(F.col("d.src").alias("src"), F.col("e.dst").alias("dst"))
-            .distinct()
-        )
-        # Semi-naive delta: only genuinely new pairs feed the next round.
-        # Anti-join, not exceptAll: both sides are already distinct, and a
-        # hash anti-join beats exceptAll's sort-based set difference.
-        # eqNullSafe keys: correct for struct-typed node ids with null
-        # fields, and generates no IsNotNull constraints (plain equi-keys
-        # trip Catalyst's Union constraint rewrite on checkpointed plans).
-        new_delta, new_delta_ids = tr.checkpoint(
-            grown.alias("g").join(
-                paths.alias("p"),
-                F.col("g.src").eqNullSafe(F.col("p.src"))
-                & F.col("g.dst").eqNullSafe(F.col("p.dst")),
-                "left_anti",
-            )
-        )
-        if new_delta.isEmpty():
-            tr.free(new_delta_ids)  # dead end: nothing references it
-            break
-        # The accumulated path set stays a lazy union of the (already
-        # checkpointed) deltas — materializing the whole union again every
-        # round cost O(rounds × |paths|) extra work (~20% of the operator
-        # at bench scale). Only every 8th round compacts the union with a
-        # checkpoint so plan depth stays bounded on deep graphs.
-        # dropDuplicates on the delta is a semantic no-op (the delta is
-        # distinct by construction) but inserts an Aggregate that
-        # regenerates plan constraints — without it, Catalyst's Union
-        # constraint rewrite hits a stale-attribute lookup
-        # (NoSuchElementException: key not found) when a later round
-        # checkpoints a struct-keyed anti-join against this union.
-        paths = paths.unionByName(new_delta.dropDuplicates())
-        union_ids |= new_delta_ids
-        rounds_since_compact += 1
-        if rounds_since_compact >= 8:
-            paths, compact_ids = tr.checkpoint(paths)
-            # every generation the compacted union subsumed is now garbage
-            # — except the current delta, which still feeds the next round
-            tr.free(union_ids - new_delta_ids)
-            union_ids = compact_ids | new_delta_ids
-            rounds_since_compact = 0
-        delta = new_delta
-    return paths
+        init, _ = tr.checkpoint(seed_df.join(base, "src"))
+
+    def step(delta, known, flagged):
+        return delta.alias("d").join(
+            base.alias("e"), F.col("d.dst") == F.col("e.src")
+        ).select(F.col("d.src").alias("src"), F.col("e.dst").alias("dst"))
+
+    grown, _ = semi_naive(
+        init, init, step, ["src", "dst"], max_iterations,
+        "transitive_closure",
+    )
+    if seeds is not None:
+        tr.free(base_ids)  # the seeded result references only checkpoints
+    return init.unionByName(grown)
 
 
 def reflexive_transitive_closure(
@@ -460,11 +431,9 @@ def bfs_hops(
 ) -> DataFrame:
     """Multi-source BFS levels → (id, hops): the minimum edge count from
     any source node, following edges src→dst (pass a symmetrized edge set
-    for undirected graphs). GraphX/Pregel ``shortestPaths`` shape as a
-    semi-naive frontier loop: each round expands ONLY the previous
-    frontier (one keyed join), anti-joins the visited set, and
-    checkpoints just the new delta — the accumulated level table stays a
-    lazy union of already-materialized blocks, so round cost is
+    for undirected graphs). GraphX/Pregel ``shortestPaths`` shape on
+    ``semi_naive``: each round expands ONLY the previous frontier (one
+    keyed join) and keeps the nodes not yet visited, so round cost is
     O(|frontier| ⋈ edges), not O(|visited|). Rounds = eccentricity of the
     source set, with ``max_iterations`` as the runaway guard (raises,
     never truncates silently).
@@ -473,31 +442,21 @@ def bfs_hops(
     e, _ = tr.checkpoint(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
     )
-    frontier, _ = tr.checkpoint(
-        sources.select(F.col(sources.columns[0]).alias("id")).distinct()
+    seeds, _ = tr.checkpoint(
+        sources.select(F.col(sources.columns[0]).alias("id"))
+        .distinct()
+        .select("id", F.lit(0).cast("long").alias("hops"))
     )
-    levels = [frontier.select("id", F.lit(0).cast("long").alias("hops"))]
-    visited = levels[0]
-    for d in range(1, max_iterations + 1):
-        nxt, nxt_ids = tr.checkpoint(
-            e.join(frontier, e.u == frontier.id)
-            .select(F.col("v").alias("id"))
-            .distinct()
-            .join(visited, "id", "left_anti")
+
+    def step(delta, known, flagged):
+        return e.join(delta, e.u == delta.id).select(
+            F.col("v").alias("id"), (F.col("hops") + 1).alias("hops")
         )
-        if nxt.isEmpty():
-            tr.free(nxt_ids)  # dead end: nothing references it
-            return visited
-        frontier = nxt
-        levels.append(nxt.select("id", F.lit(d).cast("long").alias("hops")))
-        visited = levels[0]
-        for lvl in levels[1:]:
-            visited = visited.unionByName(lvl)
-    raise RuntimeError(
-        f"bfs_hops did not exhaust the graph within {max_iterations} "
-        "rounds; eccentricity exceeds the iteration budget — raise "
-        "max_iterations"
+
+    grown, _ = semi_naive(
+        seeds, seeds, step, ["id"], max_iterations, "bfs_hops"
     )
+    return seeds.unionByName(grown)
 
 
 def sssp(
@@ -818,7 +777,8 @@ def k_core(
         .localCheckpoint(eager=True)
     )
     alive = und.select(F.col("a").alias("id")).distinct()
-    deg = None
+    tr = CheckpointTracker(edges)
+    alive_ids: set = set()
     for _ in range(rounds):
         live = und.join(
             alive.withColumnRenamed("id", "a"), "a", "semi"
@@ -826,11 +786,15 @@ def k_core(
         deg = live.groupBy(F.col("a").alias("id")).agg(
             F.count("*").alias("degree")
         )
-        alive = deg.filter(F.col("degree") >= k).select("id")
         # each round's alive set feeds TWO semi-joins next round and the
         # final degree pass: checkpoint so round r+1's plan doesn't
-        # re-expand rounds 1..r twice over
-        alive = alive.localCheckpoint(eager=True)
+        # re-expand rounds 1..r twice over; once it is materialized the
+        # previous generation is garbage
+        alive, new_ids = tr.checkpoint(
+            deg.filter(F.col("degree") >= k).select("id")
+        )
+        tr.free(alive_ids)
+        alive_ids = new_ids
     final = (
         und.join(alive.withColumnRenamed("id", "a"), "a", "semi")
         .join(alive.withColumnRenamed("id", "b"), "b", "semi")

@@ -9,16 +9,20 @@ engine kernel behind our ``urn:spark-graft:path:`` magic-predicate surface
 
 Execution model, designed for cluster scale:
 
-- **BFS is Pregel-shaped**: each round joins only the *frontier* against
-  the edge set (cost |frontier ⋈ E| with an equi-join on src), never the
-  visited set, and the frontier is anti-joined against visited so a node
-  enters exactly once. Rounds are bounded by graph diameter (hard cap
-  ``max_iterations``); plans are lineage-truncated per round via
-  CheckpointTracker, so a deep BFS can't build an exponential plan.
+- **BFS is the engine's one semi-naive loop** (``plans.ckpt.semi_naive``,
+  shared with transitive closure, inference and DESCRIBE): each round
+  joins only the *frontier* against the edge set (cost |frontier ⋈ E|
+  with an equi-join on src), never the visited set, and the loop
+  anti-joins the frontier against visited so a node enters exactly once.
+  ``bfs_distances`` and ``shortest_path`` share it; the target's arrival
+  is the probe's flag, so the early exit costs no extra job. Rounds are
+  bounded by graph diameter (hard cap ``max_iterations``, which raises);
+  each round's frontier is checkpointed, so a deep BFS can't build an
+  exponential plan.
 - **Driver traffic is O(path length)**: the only collects are the
-  per-round empty-frontier check and, for reconstruction, one single-row
-  lookup per hop of the *answer* path. No visited-set or frontier data
-  ever lands on the driver.
+  per-round probe (one row of counts) and, for reconstruction, one
+  single-row lookup per hop of the *answer* path. No visited-set or
+  frontier data ever lands on the driver.
 - **Determinism**: when multiple shortest paths exist the backtrack picks
   the lexicographically smallest predecessor at every hop, making the
   result unique, partition-order-independent, and SQL-oracle-expressible.
@@ -34,7 +38,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..plans.ckpt import CheckpointTracker
+from ..plans.ckpt import CheckpointTracker, semi_naive
 
 #: Hard ceiling for all-simple-paths enumeration; beyond this the
 #: combinatorics are unbounded on dense graphs (plugin-style guard).
@@ -49,39 +53,27 @@ def _bfs(
     tr: CheckpointTracker,
 ) -> tuple[DataFrame, set]:
     """(visited(id, dist), checkpoint ids) for every node reached from
-    ``source`` (dist 0 = the source). Early-exits once ``target`` (if
-    given) appears — its distance is final the round it enters (BFS
-    invariant). Frontier-only expansion; visited-set anti-join keeps each
-    node to exactly one entry."""
+    ``source`` (dist 0 = the source), on ``semi_naive`` keyed by node id
+    so each node enters once. Stops early once ``target`` (if given) has
+    appeared — its distance is final the round it enters (BFS
+    invariant); the target hit rides in the round's probe as its flag."""
     e, e_ids = tr.checkpoint(edges.select("src", "dst").distinct())
     spark = edges.sparkSession
     visited = spark.createDataFrame([(source, 0)], "id string, dist int")
-    frontier = visited.select("id")
-    ids: set = set()
-    for k in range(1, max_iterations + 1):
-        nxt, nxt_ids = tr.checkpoint(
-            frontier.join(e, frontier.id == e.src)
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(visited, "id", "left_anti")
-            .select("id", F.lit(k).cast("int").alias("dist"))
+
+    def step(delta, known, hit):
+        if hit:
+            return None
+        return delta.join(e, delta.id == e.src).select(
+            F.col("dst").alias("id"), (F.col("dist") + 1).alias("dist")
         )
-        if nxt.rdd.isEmpty():
-            tr.free(nxt_ids)
-            break
-        visited = visited.unionByName(nxt)
-        ids |= nxt_ids
-        frontier = nxt.select("id")
-        if target is not None and not nxt.filter(
-            F.col("id") == target
-        ).rdd.isEmpty():
-            break
-    else:
-        raise RuntimeError(
-            f"path-search BFS did not converge in {max_iterations} rounds"
-        )
+
+    grown, ids = semi_naive(
+        visited, visited, step, ["id"], max_iterations, "path-search BFS",
+        flag=None if target is None else (lambda: F.col("id") == target),
+    )
     tr.free(e_ids)
-    return visited, ids
+    return visited.unionByName(grown), ids
 
 
 def bfs_distances(

@@ -45,8 +45,8 @@ _RDF_TYPE = RDF + "type"
 
 def _schema_touch_cond_extended():
     """Column predicate for ``touches_schema_extended`` (exposed so the
-    fixpoint driver can fuse the schema-touch probe into the emptiness
-    probe — rdfsplus._probe_delta)."""
+    fixpoint loop can fuse the schema-touch probe into its emptiness
+    probe — the ``flag`` of plans.ckpt.semi_naive)."""
     return (
         F.col("p").startswith(OWL)
         | F.col("p").startswith(RDFS)

@@ -141,7 +141,7 @@ def retract(
     had_overdel = False
     seed = deleted
     converged = False
-    cond = getattr(touches_schema, "cond", None)
+    cond = touches_schema.cond
     for _ in range(max_rounds):
         cand = round_fn(old_known, seed).dropDuplicates(_ID_COLS)
         probe = cand.select(*_ID_COLS).withColumn("_m", F.lit(1))
@@ -155,18 +155,11 @@ def retract(
             fresh=True,
             eager=False,
         )
-        if cond is not None:
-            row = tagged.agg(
-                F.count(F.when(F.col("_over"), F.lit(1))).alias("n"),
-                F.count(
-                    F.when(F.col("_over") & cond(), F.lit(1))
-                ).alias("ts"),
-            ).first()
-            non_empty, over_touches = row.n > 0, row.ts > 0
-        else:
-            over_rows = tagged.filter(F.col("_over")).select(*_SPO_COLS)
-            non_empty = not over_rows.isEmpty()
-            over_touches = non_empty and touches_schema(over_rows)
+        row = tagged.agg(
+            F.count(F.when(F.col("_over"), F.lit(1))).alias("n"),
+            F.count(F.when(F.col("_over") & cond(), F.lit(1))).alias("ts"),
+        ).first()
+        non_empty, over_touches = row.n > 0, row.ts > 0
         if not non_empty:
             tr.free(new_ids)
             converged = True

@@ -105,23 +105,6 @@ def _touches_schema(delta: DataFrame) -> bool:
 _touches_schema.cond = _schema_touch_cond
 
 
-def _probe_delta(df: DataFrame, touches_schema_fn) -> tuple[bool, bool]:
-    """(non_empty, touches_schema) for a just-checkpointed delta in ONE
-    Spark job when the checker exposes its predicate Column (``.cond``
-    attribute); two probes otherwise. Fixpoint loops previously paid two
-    jobs per round here (isEmpty + the schema filter's isEmpty)."""
-    cond = getattr(touches_schema_fn, "cond", None)
-    if cond is None:
-        if df.isEmpty():
-            return False, False
-        return True, touches_schema_fn(df)
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(cond(), F.lit(1))).alias("ts"),
-    ).first()
-    return row.n > 0, row.ts > 0
-
-
 def _schema_ctx(facts: DataFrame) -> dict:
     """The schema-side tables every rule round reads, extracted from
     ``facts`` ONCE with a single collect (they are tiny — bounded by the
@@ -873,67 +856,38 @@ def _fixpoint(
     known: DataFrame, delta: DataFrame | None, max_rounds: int,
     round_fn=None, touches_schema=None,
 ) -> DataFrame:
-    """Semi-naive driver loop shared by full and incremental
-    materialization; ``delta=None`` means round 0 evaluates every rule on
-    the full statement set. ``round_fn(known, inst) -> candidates`` defaults
-    to the built-in RDFS-Plus rule batch; inference/custom.py plugs in a
-    CONSTRUCT-rule batch for user-defined rulesets. ``touches_schema``
-    overrides the schema-delta check (the extended rulesets guard a
-    wider vocabulary — inference/delta.py).
+    """Rule fixpoint shared by full and incremental materialization and
+    DRed propagation, on the engine's one semi-naive loop
+    (``plans.ckpt.semi_naive``); ``delta=None`` means round 0 evaluates
+    every rule on the full statement set. ``round_fn(known, inst) ->
+    candidates`` defaults to the built-in RDFS-Plus rule batch;
+    inference/custom.py plugs in a CONSTRUCT-rule batch for user-defined
+    rulesets. ``touches_schema`` overrides the schema-delta check (the
+    extended rulesets guard a wider vocabulary — inference/delta.py); its
+    ``.cond`` predicate is the loop's probe flag, so a round whose fresh
+    triples touch the schema is followed by a full round (new rule inputs
+    can fire on OLD statements) at no extra job. Raises ``RuntimeError``
+    when the closure is still growing after ``max_rounds`` rounds.
 
     Scale note: only each round's FRESH set is checkpointed. ``known``
     grows as a LAZY union of the caller's base (which must be cheap to
-    rescan — checkpoint/store-backed) plus those fresh checkpoints — the
-    old per-round checkpoint of the ENTIRE known set was a full-store
-    materialized copy per round (20 copies through a 20-round
-    materialization of a 100 TB store). Duplicate rows in the base are
-    tolerated: candidates are de-duplicated and the anti-join only
-    probes membership."""
-    from ..plans.ckpt import CheckpointTracker
+    rescan — checkpoint/store-backed) plus those fresh checkpoints.
+    Duplicate rows in the base are tolerated: candidates are
+    de-duplicated and the anti-join only probes membership."""
+    from ..plans.ckpt import semi_naive
 
     if round_fn is None:
         round_fn = _cached_round_fn()
-    tr = CheckpointTracker(known)
-    empty = known.limit(0)
-    inferred_acc: DataFrame | None = None
     touch_fn = touches_schema or _touches_schema
-    # schema-touch state of the CURRENT delta: probed once for the
-    # caller-provided seed, then carried forward from each round's fused
-    # checkpoint probe instead of re-filtering the delta every round
-    delta_touches = False if delta is None else touch_fn(delta)
-    for _ in range(max_rounds):
-        # Semi-naive: after round 0, high-volume rules join only last
-        # round's delta — unless that delta added schema facts, which force
-        # a full re-evaluation (new rule inputs can fire on OLD statements).
-        inst = None if delta is None or delta_touches else delta
-        candidates = round_fn(known, inst)
-        # Null-safe anti-join: o_dtype/o_lang are NULL on most inferred
-        # triples, and plain equi-join keys treat NULL != NULL — which would
-        # re-derive every triple forever. eqNullSafe keeps the hash-join
-        # strategy while matching NULLs.
-        cand = candidates.dropDuplicates(_ID_COLS).alias("c")
-        kn = known.alias("k")
-        cond = None
-        for col in _ID_COLS:
-            clause = F.col(f"c.{col}").eqNullSafe(F.col(f"k.{col}"))
-            cond = clause if cond is None else (cond & clause)
-        # lazy checkpoint + fused probe: the probe aggregate is the
-        # materializing action, so each round schedules ONE job where the
-        # eager-checkpoint + separate-probe shape scheduled two
-        fresh, fresh_ids = tr.checkpoint(
-            cand.join(kn, on=cond, how="left_anti"), fresh=True, eager=False
-        )
-        non_empty, delta_touches = _probe_delta(fresh, touch_fn)
-        if not non_empty:
-            tr.free(fresh_ids)  # dead end: nothing references it
-            break
-        known = known.unionByName(fresh)
-        delta = fresh
-        inferred_acc = (
-            fresh if inferred_acc is None else inferred_acc.unionByName(fresh)
-        )
-    if inferred_acc is None:
-        inferred_acc = empty
-    return inferred_acc.select(
-        F.lit(INFERRED_GRAPH).alias("g"), *_SPO_COLS
+
+    def step(delta, known, touches):
+        return round_fn(known, None if delta is None or touches else delta)
+
+    inferred, _ = semi_naive(
+        known, delta, step, _ID_COLS, max_rounds, "inference fixpoint",
+        flag=touch_fn.cond,
+        # the seed's own schema probe stays isEmpty-shaped: an aggregate
+        # over a fresh Δ costs one more shuffle-map job
+        flagged=delta is not None and touch_fn(delta),
     )
+    return inferred.select(F.lit(INFERRED_GRAPH).alias("g"), *_SPO_COLS)

@@ -2304,24 +2304,25 @@ class QueryCompiler:
             targets, self.quads.o_lex == targets.target, "left_semi"
         )
         result = by_s.unionByName(by_o).distinct()
-        # Concise bounded description: follow blank-node objects so anonymous
-        # sub-structures (e.g. geometry nodes) are fully described. Bounded
-        # driver loop — bnode chains are structurally shallow.
-        for _ in range(5):
+        # Concise bounded description: follow blank-node objects so
+        # anonymous sub-structures (geometry nodes, RDF lists) are fully
+        # described. Each round describes only the blank nodes new in the
+        # last round; a chain deeper than the budget raises.
+        from dublin_smart_city_graphdb_spark.plans.ckpt import semi_naive
+
+        def step(delta, known, flagged):
             bnodes = F.broadcast(
-                result.filter(F.col("o_kind") == 1)
+                delta.filter(F.col("o_kind") == 1)
                 .select(F.col("o_lex").alias("target"))
                 .distinct()
             )
-            extra = self.quads.join(
+            return self.quads.join(
                 bnodes, self.quads.s == bnodes.target, "left_semi"
             )
-            cond = None
-            for c in ["g", "s", "p", "o_kind", "o_lex", "o_dtype", "o_lang"]:
-                clause = F.col(f"e.{c}").eqNullSafe(F.col(f"r.{c}"))
-                cond = clause if cond is None else cond & clause
-            fresh = extra.alias("e").join(result.alias("r"), cond, "left_anti")
-            if fresh.isEmpty():
-                break
-            result = result.unionByName(fresh).localCheckpoint(eager=True)
-        return result
+
+        grown, _ = semi_naive(
+            result, result, step,
+            ["g", "s", "p", "o_kind", "o_lex", "o_dtype", "o_lang"],
+            50, "DESCRIBE blank-node closure",
+        )
+        return result.unionByName(grown)

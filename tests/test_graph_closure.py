@@ -186,6 +186,18 @@ def test_transitive_closure_deep_chain_crosses_compaction(spark):
     assert got == want
 
 
+def test_transitive_closure_raises_instead_of_truncating(spark):
+    """A 12-edge chain needs 11 growing rounds; with a budget of 3 the
+    closure must raise rather than return a subset of the 78 pairs."""
+    import pytest as _pytest
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], ["src", "dst"]
+    )
+    with _pytest.raises(RuntimeError, match="did not exhaust"):
+        transitive_closure(edges, max_iterations=3).collect()
+
+
 def test_bfs_hops_path_graph_levels(spark):
     """BFS from node 0 over a symmetrized 10-edge path: hops = index."""
     from dublin_smart_city_graphdb_spark.graph.closure import bfs_hops
@@ -387,3 +399,24 @@ def test_personalized_pagerank_concentrates_on_sources(spark):
     got = {r.id: r.rank for r in
            personalized_pagerank(edges, sources, iterations=1).collect()}
     assert got == {1: 0.15, 2: 0.85, 3: 0.0, 4: 0.0}
+
+
+def test_k_core_frees_superseded_alive_generations(spark):
+    """Each peel round checkpoints the alive set; every generation but the
+    last is garbage once its successor exists. Of the RDDs k_core
+    persists, at most the edge set and the final alive set may stay."""
+    from dublin_smart_city_graphdb_spark.graph.closure import k_core
+
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)] + [(0, 2), (1, 3)],
+        "src long, dst long",
+    )
+    before = persisted()
+    out = k_core(edges, k=2, rounds=6)
+    assert len(persisted() - before) <= 2
+    assert {r.id for r in out.collect()} == {0, 1, 2, 3}

@@ -482,6 +482,24 @@ def test_describe_follows_bnode_closure(spark):
     assert preds == ["code", "geom", "name", "srs", "wkt"]
 
 
+def test_describe_follows_a_long_list_to_its_end(spark):
+    """An RDF list is a blank-node chain one level per item: DESCRIBE must
+    follow all seven levels, not stop at a fixed depth."""
+    eng = Engine(spark)
+    r = eng.create_repository("cbd_list", ruleset="none")
+    r.load_turtle("""
+        @prefix ex: <http://cbd#> .
+        ex:x ex:items ("a" "b" "c" "d" "e" "f" "g") .
+    """)
+    rows = r.sparql_collect("DESCRIBE <http://cbd#x>")
+    # x's 1 statement + rdf:first and rdf:rest of each of the 7 list nodes
+    assert len(rows) == 15
+    firsts = sorted(
+        row["o_lex"] for row in rows if row["p"].endswith("#first")
+    )
+    assert firsts == ["a", "b", "c", "d", "e", "f", "g"]
+
+
 def test_builtin_functions(micro):
     rows = micro.sparql_collect(
         MP

@@ -1,18 +1,19 @@
-"""Round-11 optimization profiler (guide §1: measure first).
+"""Registry profiler: build+execute time per entry, best of N sweeps.
 
 Times registry entries at a given sf dir with the noop sink — which
-eagerly computes every column of every row (guide §1.4) — so the number
-is the computation, not the count()-pruned subtree or a real sink. Each
-entry is timed as build+execute per round (plan construction included:
+eagerly computes every column of every row — so the number is the
+computation, not the count()-pruned subtree or a real sink. Each entry
+is timed as build+execute per sweep (plan construction included:
 fixpoint operators do real work at build time), best-of-N across
-interleaved sweeps, jobs labelled per guide §1.5.
+interleaved sweeps, jobs labelled ``profile:<name>``.
 
-Optionally dumps `.explain("formatted")` per entry to plans/r12/.
+With ``--plans-dir DIR`` it also writes each entry's
+``.explain("formatted")`` to ``DIR/<name>_<suffix>.txt`` (first sweep).
 
 Usage::
 
-    python tools/r12_profile.py SF_DIR OUT_JSON [--rounds N]
-        [--plans-suffix before|after] [name ...]
+    python tools/profile_registry.py SF_DIR OUT_JSON [--rounds N]
+        [--plans-dir DIR [--plans-suffix before|after]] [name ...]
 """
 
 from __future__ import annotations
@@ -31,12 +32,15 @@ def main() -> None:
     sf_dir = args.pop(0)
     out_json = args.pop(0)
     rounds = 3
-    plans_suffix = None
+    plans_dir = None
+    plans_suffix = "plan"
     names: list[str] = []
     while args:
         a = args.pop(0)
         if a == "--rounds":
             rounds = int(args.pop(0))
+        elif a == "--plans-dir":
+            plans_dir = Path(args.pop(0))
         elif a == "--plans-suffix":
             plans_suffix = args.pop(0)
         else:
@@ -45,7 +49,7 @@ def main() -> None:
     from dublin_smart_city_graphdb_spark import harness
     from dublin_smart_city_graphdb_spark.session import get_spark
 
-    spark = get_spark(app_name="r12-profile")
+    spark = get_spark(app_name="profile")
     if not names:
         names = sorted(harness.REGISTRY)
 
@@ -55,8 +59,7 @@ def main() -> None:
 
     _quads(spark, sf_dir).count()
 
-    plans_dir = ROOT / "plans" / "r12"
-    if plans_suffix:
+    if plans_dir is not None:
         plans_dir.mkdir(parents=True, exist_ok=True)
 
     samples: dict[str, list[float]] = {n: [] for n in names}
@@ -67,7 +70,7 @@ def main() -> None:
                 continue
             fn = harness.REGISTRY[name].fn
             sc = spark.sparkContext
-            sc.setJobDescription(f"r12-profile:{name}")
+            sc.setJobDescription(f"profile:{name}")
             t0 = time.time()
             try:
                 df = fn(spark, sf_dir)
@@ -78,7 +81,7 @@ def main() -> None:
             finally:
                 sc.setJobDescription(None)
             samples[name].append(time.time() - t0)
-            if rnd == 0 and plans_suffix:
+            if rnd == 0 and plans_dir is not None:
                 qe = df._jdf.queryExecution()
                 mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                     "formatted"
