@@ -18,9 +18,11 @@ Mirrors the reference deployment's operational surface (SURVEY.md §3):
 
 from __future__ import annotations
 
+import contextvars
 import json
 import os
 import threading
+import time
 import uuid
 
 import pyspark.sql.functions as F
@@ -72,6 +74,31 @@ def _key_in(spark: SparkSession, keys) -> Column:
         "\0".join(keys)
     )
     return Column(_id_key()._jc.isin(jvm.PythonUtils.toSeq(parts.toList())))
+
+
+#: Arrival time (``time.time()``) of the request served in this context,
+#: set by the HTTP layer: query timeouts count from it, so parse and
+#: compile are inside the deadline.
+REQUEST_STARTED: contextvars.ContextVar[float | None] = contextvars.ContextVar(
+    "request_started", default=None
+)
+
+
+#: The local properties ``SparkContext.setJobGroup`` sets on a thread.
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel",
+)
+
+
+def _cancel_group(sc, group: str) -> None:
+    """Cancel a query's job group: its running jobs and every job it
+    submits afterwards."""
+    sc._jsc.sc().cancelJobGroupAndFutureJobs(group)
+
+
+def _lazy(compute):
+    """One-chunk iterator that calls ``compute()`` when first advanced."""
+    yield compute()
 
 
 class QueryAbortedError(RuntimeError):
@@ -770,9 +797,8 @@ class Repository:
         ``Accept: application/sparql-results+json`` path, init-graphdb.sh:134)."""
         from dublin_smart_city_graphdb_spark.sparql.protocol import rows_to_json
 
-        df = self.sparql(query_text)
         rows = self.sparql_collect(query_text, timeout=timeout)
-        return rows_to_json(df.columns, rows)
+        return rows_to_json(self.sparql(query_text).columns, rows)
 
     def sparql_serialized(
         self, query_text: str, accept: str = "application/sparql-results+json",
@@ -781,7 +807,9 @@ class Repository:
         """Query → (payload, content-type) for the protocol Accept types:
         results-JSON (default), results-XML (the W3C protocol default the
         reference endpoint serves, README.md:63-65), results-CSV,
-        results-TSV."""
+        results-TSV; CONSTRUCT/DESCRIBE also RDF/XML, N-Triples and
+        JSON-LD (``graph_result_chunks``, joined). Every form runs under
+        the query timeout and the monitor (``_guarded_chunks``)."""
         import json as _json
 
         from dublin_smart_city_graphdb_spark.sparql.protocol import (
@@ -792,79 +820,18 @@ class Repository:
         )
 
         # CONSTRUCT/DESCRIBE return an RDF GRAPH, not a result set: serve
-        # N-Triples when the client asks for a graph serialization (the
-        # W3C protocol behavior; JSON stays available for tooling).
-        from dublin_smart_city_graphdb_spark.sparql import ast as _ast
+        # it in the requested graph serialization (the W3C protocol
+        # behavior; results-JSON stays available for tooling).
+        graph = self._graph_build(query_text, accept, include_inferred)
+        if graph is not None:
+            build, ctype = graph
+            chunks = self._guarded_chunks(query_text, build, timeout)
+            return "".join(chunks), ctype
 
-        form = parse_query(query_text)
-        if isinstance(form, (_ast.ConstructQuery, _ast.DescribeQuery)):
-            if "application/rdf+xml" in accept:
-                import pyspark.sql.functions as F
-
-                from dublin_smart_city_graphdb_spark.inference.custom import (
-                    _construct_to_spo,
-                )
-                from dublin_smart_city_graphdb_spark.sparql.protocol import (
-                    RDFXML_FOOTER,
-                    RDFXML_HEADER,
-                    quads_to_rdfxml_fragments,
-                )
-
-                spo = _construct_to_spo(
-                    self.sparql(query_text, include_inferred=include_inferred)
-                ).withColumn("g", F.lit(None).cast("string"))
-                frags = [
-                    r["value"]
-                    for r in quads_to_rdfxml_fragments(spo).collect()
-                ]
-                if any(f is None for f in frags):
-                    raise ValueError(
-                        "a predicate IRI has no XML-expressible local "
-                        "name; request N-Triples"
-                    )
-                return (
-                    "\n".join([RDFXML_HEADER, *frags, RDFXML_FOOTER]) + "\n",
-                    "application/rdf+xml",
-                )
-            if "application/ld+json" in accept:
-                import pyspark.sql.functions as F
-
-                from dublin_smart_city_graphdb_spark.inference.custom import (
-                    _construct_to_spo,
-                )
-                from dublin_smart_city_graphdb_spark.sparql.protocol import (
-                    JSONLD_EXPORT_CAP,
-                    quads_to_jsonld,
-                )
-
-                spo = _construct_to_spo(
-                    self.sparql(query_text, include_inferred=include_inferred)
-                ).withColumn("g", F.lit(None).cast("string"))
-                return (
-                    quads_to_jsonld(spo, max_quads=JSONLD_EXPORT_CAP) + "\n",
-                    "application/ld+json",
-                )
-            if any(
-                t in accept
-                for t in ("application/n-triples", "text/turtle", "text/plain")
-            ):
-                from dublin_smart_city_graphdb_spark.sparql.protocol import (
-                    construct_to_ntriples,
-                )
-
-                lines = construct_to_ntriples(
-                    self.sparql(query_text, include_inferred=include_inferred)
-                ).collect()
-                return (
-                    "\n".join(r["value"] for r in lines)
-                    + ("\n" if lines else ""),
-                    "application/n-triples",
-                )
-
-        df = self.sparql(query_text, include_inferred=include_inferred)
         rows = self.sparql_collect(
             query_text, timeout=timeout, include_inferred=include_inferred
         )
+        df = self.sparql(query_text, include_inferred=include_inferred)
         if "application/sparql-results+xml" in accept or "application/xml" in accept:
             return (
                 rows_to_xml(df.columns, rows),
@@ -890,7 +857,9 @@ class Repository:
         one partition resident on the driver at a time — so a 10^8-row
         SELECT never sits in driver memory as one list, matching how
         GraphDB streams result sets (the HTTP layer switches to a
-        streamed response above a row threshold)."""
+        streamed response above a row threshold). Compile and stream run
+        under the repository's query timeout and the monitor
+        (``_guarded_chunks``)."""
         from dublin_smart_city_graphdb_spark.sparql import ast as _ast
         from dublin_smart_city_graphdb_spark.sparql.protocol import (
             select_result_chunks,
@@ -899,71 +868,185 @@ class Repository:
         form = parse_query(query_text)
         if not isinstance(form, _ast.SelectQuery):
             return None
-        df = self.sparql(query_text, include_inferred=include_inferred)
-        return select_result_chunks(df, batch_rows=batch_rows)
+        return self._guarded_chunks(
+            query_text,
+            lambda: select_result_chunks(
+                self.sparql(query_text, include_inferred=include_inferred),
+                batch_rows=batch_rows,
+            ),
+        )
 
     def graph_result_chunks(
         self, query_text: str, accept: str,
         include_inferred: bool = True, batch_rows: int = 1024,
     ):
-        """CONSTRUCT/DESCRIBE graph serializations as an ITERATOR of text
-        chunks, or None when the form/Accept pair has no streaming path
-        (SELECT/ASK, or JSON-LD whose driver-side assembly is capped
-        instead — see protocol.JSONLD_EXPORT_CAP). Returns
-        ``(chunk_iter, content_type)``. Chunk concatenation is
-        byte-identical to ``sparql_serialized``'s buffered body; rows
-        arrive through ``toLocalIterator`` so a 10^8-triple CONSTRUCT
-        never sits on the driver as one string (VERDICT r7 task 1 —
-        GraphDB streams these). RDF/XML runs a distributed
-        inexpressible-predicate probe first (a LIMIT-1 filter job), so
-        the 4xx still happens before any bytes hit the wire."""
+        """CONSTRUCT/DESCRIBE graph serializations as ``(chunk_iter,
+        content_type)``, or None when the form/Accept pair has no graph
+        serialization (SELECT/ASK, or a result-set Accept). Chunk
+        concatenation is ``sparql_serialized``'s body; N-Triples and
+        RDF/XML rows arrive through ``toLocalIterator`` so a 10^8-triple
+        CONSTRUCT never sits on the driver as one string (VERDICT r7 task
+        1 — GraphDB streams these). RDF/XML runs a distributed
+        inexpressible-predicate probe first (a LIMIT-1 filter job), so the
+        4xx still happens before any bytes hit the wire. JSON-LD is one
+        chunk, assembled on the driver under protocol.JSONLD_EXPORT_CAP.
+        Compile, probe and stream run under the repository's query timeout
+        and the monitor (``_guarded_chunks``)."""
+        graph = self._graph_build(
+            query_text, accept, include_inferred, batch_rows
+        )
+        if graph is None:
+            return None
+        build, ctype = graph
+        return self._guarded_chunks(query_text, build), ctype
+
+    def _graph_build(
+        self, query_text: str, accept: str,
+        include_inferred: bool = True, batch_rows: int = 1024,
+    ):
+        """``(build, content_type)`` of a CONSTRUCT/DESCRIBE answer in the
+        first graph serialization ``accept`` names (RDF/XML, N-Triples,
+        JSON-LD), or None. ``build()`` compiles the query and returns the
+        answer's chunk iterator, for ``_guarded_chunks``."""
         import pyspark.sql.functions as F
 
+        from dublin_smart_city_graphdb_spark.inference.custom import (
+            _construct_to_spo,
+        )
         from dublin_smart_city_graphdb_spark.sparql import ast as _ast
         from dublin_smart_city_graphdb_spark.sparql.protocol import (
+            JSONLD_EXPORT_CAP,
             RDFXML_FOOTER,
             RDFXML_HEADER,
             construct_to_ntriples,
             line_chunk_iter,
+            quads_to_jsonld,
             quads_to_rdfxml_fragments,
         )
 
         form = parse_query(query_text)
         if not isinstance(form, (_ast.ConstructQuery, _ast.DescribeQuery)):
             return None
-        if "application/rdf+xml" in accept:
-            from dublin_smart_city_graphdb_spark.inference.custom import (
-                _construct_to_spo,
-            )
 
-            spo = _construct_to_spo(
+        def spo():
+            return _construct_to_spo(
                 self.sparql(query_text, include_inferred=include_inferred)
             ).withColumn("g", F.lit(None).cast("string"))
-            frags = quads_to_rdfxml_fragments(spo)
+
+        def rdfxml():
+            frags = quads_to_rdfxml_fragments(spo())
             if frags.filter(F.col("value").isNull()).limit(1).count():
                 raise ValueError(
                     "a predicate IRI has no XML-expressible local "
                     "name; request N-Triples"
                 )
-            return (
-                line_chunk_iter(
-                    frags, batch_rows,
-                    head=RDFXML_HEADER, tail=RDFXML_FOOTER,
-                ),
-                "application/rdf+xml",
+            return line_chunk_iter(
+                frags, batch_rows, head=RDFXML_HEADER, tail=RDFXML_FOOTER,
             )
+
+        def ntriples():
+            return line_chunk_iter(
+                construct_to_ntriples(
+                    self.sparql(query_text, include_inferred=include_inferred)
+                ),
+                batch_rows,
+            )
+
+        def jsonld():
+            quads = spo()
+            return _lazy(
+                lambda: quads_to_jsonld(quads, max_quads=JSONLD_EXPORT_CAP)
+                + "\n"
+            )
+
+        if "application/rdf+xml" in accept:
+            return rdfxml, "application/rdf+xml"
         if any(
             t in accept
             for t in ("application/n-triples", "text/turtle", "text/plain")
         ):
-            lines = construct_to_ntriples(
-                self.sparql(query_text, include_inferred=include_inferred)
-            )
-            return (
-                line_chunk_iter(lines, batch_rows),
-                "application/n-triples",
-            )
+            return ntriples, "application/n-triples"
+        if "application/ld+json" in accept:
+            return jsonld, "application/ld+json"
         return None
+
+    def _deadline(self, timeout: float | None) -> tuple[float, float]:
+        """(timeout, absolute deadline) of a query: the repository's query
+        timeout (the reference's 30 s ``queryTimeout``,
+        init-graphdb.sh:66-70) unless given, counted from the arrival of
+        the request being served (``REQUEST_STARTED``), else from now."""
+        timeout = timeout or self.config.get("query_timeout", 30)
+        return timeout, (REQUEST_STARTED.get() or time.time()) + timeout
+
+    def _guarded_chunks(self, query_text: str, build, timeout=None):
+        """Run a read under the query timeout and the monitor: the one
+        mechanism behind every ``Repository`` SPARQL read.
+
+        ``build()`` compiles the query and returns its chunk iterator (or
+        None). Compile and iteration run in the caller's thread under a
+        fresh job group registered in the engine's query monitor. At the
+        deadline a timer cancels the group, and a monitor abort does the
+        same; either cancel also fails every job the group submits later,
+        so a compile still running then starts no further work. The
+        deadline and the abort flag are checked after the compile and
+        before every chunk; a stop surfaces as TimeoutError /
+        QueryAbortedError. The compile runs before this returns, so a
+        compile past the deadline raises here; the returned iterator is
+        already started, and exhausting, closing or dropping it
+        unregisters the query."""
+        gen = self._guarded_gen(query_text, build, *self._deadline(timeout))
+        if not next(gen):
+            gen.close()
+            return None
+        return gen
+
+    def _guarded_gen(self, query_text: str, build, timeout, deadline):
+        sc = self.spark.sparkContext
+        group = f"sparql-{uuid.uuid4().hex[:8]}"
+
+        def check() -> None:
+            if entry["aborted"]:
+                raise QueryAbortedError(
+                    f"query {entry['id']} aborted via monitor"
+                )
+            if time.time() >= deadline:
+                raise TimeoutError(f"query exceeded {timeout}s timeout")
+
+        timer = threading.Timer(
+            max(0.0, deadline - time.time()), _cancel_group, (sc, group)
+        )
+        timer.daemon = True
+        saved = [sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS]
+        # interruptOnCancel=False: cancellation uses the task-killed flag
+        # (checked at record boundaries), NOT Thread.interrupt — an
+        # interrupt landing in Parquet IO / codegen can raise a fatal
+        # error in a daemon thread, and Spark's uncaught-exception handler
+        # then EXITS the whole JVM (observed: the timeout test
+        # nondeterministically killed the suite's shared session on
+        # contended runs; Spark's own docs flag the interrupt path as
+        # unsafe for exactly this reason).
+        sc.setJobGroup(group, "sparql query", interruptOnCancel=False)
+        entry = self.engine._register_query(self.name, query_text, group)
+        timer.start()
+        try:
+            chunks = build()
+            check()
+            yield chunks is not None
+            for c in chunks or ():
+                check()
+                yield c
+        except (TimeoutError, QueryAbortedError):
+            raise
+        except Exception:
+            # a cancelled job fails with Spark's own error: report why
+            check()
+            raise
+        finally:
+            timer.cancel()
+            self.engine._unregister_query(entry["id"])
+            # restore the caller's job group (usually none)
+            for k, v in zip(_JOB_GROUP_PROPS, saved):
+                sc.setLocalProperty(k, v)
 
     def explain(self, query_text: str, mode: str = "formatted") -> str:
         """The physical plan Spark will execute for a SPARQL query (modes:
@@ -1242,62 +1325,18 @@ class Repository:
         timeout: float | None = None,
         include_inferred: bool = True,
     ):
-        """Execute with the repository's query timeout (the reference's 30 s
-        ``queryTimeout``, init-graphdb.sh:66-70) via job-group cancellation.
-        Registers the run in the engine's query monitor (GraphDB's running-
-        queries REST surface): it can be listed and aborted concurrently."""
-        import time as _time
+        """Compile and collect under the repository's query timeout (the
+        reference's 30 s ``queryTimeout``, init-graphdb.sh:66-70) unless
+        ``timeout`` is given, and the engine's query monitor (GraphDB's
+        running-queries REST surface), where it can be listed and aborted
+        concurrently — see ``_guarded_chunks``."""
 
-        timeout = timeout or self.config.get("query_timeout", 30)
-        df = self.sparql(query_text, include_inferred=include_inferred)
-        sc = self.spark.sparkContext
-        group = f"sparql-{uuid.uuid4().hex[:8]}"
-        result: list = []
-        error: list = []
+        def build():
+            df = self.sparql(query_text, include_inferred=include_inferred)
+            return _lazy(df.collect)
 
-        def run():
-            # interruptOnCancel=False: cancellation uses the task-killed
-            # flag (checked at record boundaries), NOT Thread.interrupt —
-            # an interrupt landing in Parquet IO / codegen can raise a
-            # fatal error in a daemon thread, and Spark's uncaught-
-            # exception handler then EXITS the whole JVM (observed: the
-            # timeout test nondeterministically killed the suite's shared
-            # session on contended runs; Spark's own docs flag the
-            # interrupt path as unsafe for exactly this reason).
-            sc.setJobGroup(group, "sparql query", interruptOnCancel=False)
-            try:
-                result.append(df.collect())
-            except Exception as ex:  # noqa: BLE001
-                error.append(ex)
-
-        entry = self.engine._register_query(self.name, query_text, group)
-        t = threading.Thread(target=run, daemon=True)
-        t.start()
-        try:
-            deadline = _time.time() + timeout
-            while t.is_alive() and _time.time() < deadline:
-                if entry["aborted"]:
-                    sc.cancelJobGroup(group)
-                    raise QueryAbortedError(
-                        f"query {entry['id']} aborted via monitor"
-                    )
-                t.join(0.05)
-            if t.is_alive():
-                sc.cancelJobGroup(group)
-                raise TimeoutError(f"query exceeded {timeout}s timeout")
-        finally:
-            self.engine._unregister_query(entry["id"])
-        if entry["aborted"]:
-            # the abort cancelled the job group and the runner thread may
-            # have died with the RAW Spark cancellation exception before
-            # the 50 ms poll observed the flag — the contract is
-            # QueryAbortedError either way (raced under full-suite load)
-            raise QueryAbortedError(
-                f"query {entry['id']} aborted via monitor"
-            )
-        if error:
-            raise error[0]
-        return result[0]
+        (rows,) = self._guarded_chunks(query_text, build, timeout)
+        return rows
 
     def count(self) -> int:
         """The reference's verification query (init-graphdb.sh:133)."""
@@ -1518,15 +1557,13 @@ class Engine:
     # -- query monitor (GraphDB running-queries surface) --------------------
     def _register_query(self, repo: str, query: str, group: str | None,
                         state: str = "IN_QUERY") -> dict:
-        import time as _time
-
         with self._monitor_lock:
             self._query_seq += 1
             entry = {
                 "id": f"q{self._query_seq}",
                 "repository": repo,
                 "query": query,
-                "start": _time.time(),
+                "start": time.time(),
                 "group": group,
                 "aborted": False,
                 "state": state,
@@ -1543,9 +1580,7 @@ class Engine:
         elapsed_s, state}] — the ``GET /rest/monitor/query`` listing.
         ``state`` mirrors GraphDB's lifecycle report: IN_QUERY for reads,
         IN_COMMIT while an update's visibility switch is landing."""
-        import time as _time
-
-        now = _time.time()
+        now = time.time()
         with self._monitor_lock:
             return [
                 {
@@ -1566,7 +1601,7 @@ class Engine:
         The caller gets its error immediately; the killed tasks drain
         asynchronously — cancellation uses the task-killed flag, checked at
         record boundaries, NOT Thread.interrupt (an interrupt landing in
-        Parquet IO can fatally exit the JVM — see sparql_collect). A
+        Parquet IO can fatally exit the JVM — see Repository._guarded_gen). A
         long-running codegen'd loop (e.g. a cartesian COUNT) can hold its
         task slots for tens of seconds after the abort; schedule follow-up
         work accordingly (cluster deployments put queries in a FAIR pool
@@ -1578,7 +1613,7 @@ class Engine:
                 # is atomic — there is no safe point to cancel it at
                 return False
             entry["aborted"] = True
-        self.spark.sparkContext.cancelJobGroup(entry["group"])
+        _cancel_group(self.spark.sparkContext, entry["group"])
         return True
 
     def abort_all_queries(self) -> list[str]:
@@ -1595,7 +1630,7 @@ class Engine:
             for tid, _ in targets:
                 self._running[tid]["aborted"] = True
         for _, group in targets:
-            self.spark.sparkContext.cancelJobGroup(group)
+            _cancel_group(self.spark.sparkContext, group)
         return [tid for tid, _ in targets]
 
     def register_function(self, iri: str, fn) -> None:

@@ -53,7 +53,8 @@ def star_view(
         base = base.join(typed, on="s", how="left_semi")
     aggs = [
         F.first(
-            F.when(F.col("p") == pred, object_struct()), ignorenulls=True
+            F.when(F.col("p") == pred, F.expr(object_struct())),
+            ignorenulls=True,
         ).alias(pred)
         for pred in predicates
     ]

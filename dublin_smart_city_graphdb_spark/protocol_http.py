@@ -30,12 +30,13 @@ from __future__ import annotations
 
 import json
 import threading
+import time
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pyspark.sql.functions as F
 
-from dublin_smart_city_graphdb_spark.engine import Engine
+from dublin_smart_city_graphdb_spark.engine import REQUEST_STARTED, Engine
 from dublin_smart_city_graphdb_spark.shacl import ShaclViolationError
 
 
@@ -70,6 +71,11 @@ def _make_handler(engine: Engine):
         def log_message(self, fmt, *args):  # quiet test output
             pass
 
+        def parse_request(self):
+            # request arrival: a query's timeout counts from here
+            REQUEST_STARTED.set(time.time())
+            return super().parse_request()
+
         # -- helpers ---------------------------------------------------------
         def _answer_query(self, repo, query: str, infer: bool) -> None:
             """Run a protocol query and answer it — streamed for large
@@ -103,6 +109,9 @@ def _make_handler(engine: Engine):
                 self._send(200, payload, ctype)
             except _StreamAborted:
                 return  # connection already marked for close mid-stream
+            except TimeoutError as ex:
+                # RDF4J answers an interrupted (timed-out) query with 503
+                self._send(503, {"error": str(ex)})
             except Exception as ex:  # noqa: BLE001 — protocol boundary
                 self._send(400, {"error": str(ex)})
 

@@ -51,10 +51,13 @@ def get_spark(
         # long-lived driver — a 600-test suite, a notebook, a server — can
         # pin many GiB of dead plan text until the heap GC-spirals. Keep a
         # handful for debugging; same numbers are the right call on a real
-        # cluster driver.
+        # cluster driver. Jobs and stages are kept by the thousand: the
+        # status tracker counts a job group's jobs from this store, and a
+        # fixpoint's group runs a few hundred (a cap of 100 under-counted
+        # silently).
         .config("spark.sql.ui.retainedExecutions", "8")
-        .config("spark.ui.retainedJobs", "100")
-        .config("spark.ui.retainedStages", "100")
+        .config("spark.ui.retainedJobs", "1000")
+        .config("spark.ui.retainedStages", "1000")
         .config("spark.ui.retainedTasks", "1000")
     )
     for k, v in (extra_conf or {}).items():

@@ -44,7 +44,7 @@ from dublin_smart_city_graphdb_spark.model.terms import (
     Term,
 )
 from dublin_smart_city_graphdb_spark.sparql import ast as A
-from dublin_smart_city_graphdb_spark.sparql.exprs import ExprCompiler
+from dublin_smart_city_graphdb_spark.sparql.exprs import ExprCompiler, numeric_const
 from dublin_smart_city_graphdb_spark.sparql.termcol import (
     const_struct,
     ebv,
@@ -54,6 +54,8 @@ from dublin_smart_city_graphdb_spark.sparql.termcol import (
     object_const_filter,
     object_struct,
     sort_keys,
+    sql_col,
+    sql_lit,
     subject_struct,
 )
 from dublin_smart_city_graphdb_spark.model.terms import XSD
@@ -76,15 +78,11 @@ def _pushable_ranges(filters: list) -> dict[str, list[tuple[str, object]]]:
                 visit(p)
             return
         if isinstance(e, A.Compare) and e.op in _RANGE_OPS:
-            def num(t):
-                return t.numeric_value() if isinstance(t, Literal) else None
-
-            if isinstance(e.left, A.Var) and num(e.right) is not None:
-                out.setdefault(e.left.name, []).append((e.op, num(e.right)))
-            elif isinstance(e.right, A.Var) and num(e.left) is not None:
-                out.setdefault(e.right.name, []).append(
-                    (_FLIP[e.op], num(e.left))
-                )
+            lv, rv = numeric_const(e.left), numeric_const(e.right)
+            if isinstance(e.left, A.Var) and rv is not None:
+                out.setdefault(e.left.name, []).append((e.op, rv))
+            elif isinstance(e.right, A.Var) and lv is not None:
+                out.setdefault(e.right.name, []).append((_FLIP[e.op], lv))
 
     for f in filters:
         visit(f)
@@ -132,6 +130,29 @@ def _collect_exists(e) -> list:
         if sub is not None:
             out.extend(_collect_exists(sub))
     return out
+
+
+def _select(df: DataFrame, items: list[tuple[str | Column, str]]) -> DataFrame:
+    """One projection of ``(expression, name)`` items. SQL-text items are
+    parsed by the JVM (one ``selectExpr`` call when every item is text);
+    Column items keep the Column API."""
+    if all(isinstance(e, str) for e, _ in items):
+        return df.selectExpr(*[
+            e if e == sql_col(n) else f"{e} AS {sql_col(n)}"
+            for e, n in items
+        ])
+    return df.select(*[_col(e).alias(n) for e, n in items])
+
+
+def _col(e: str | Column) -> Column:
+    return F.expr(e) if isinstance(e, str) else e
+
+
+def _sql_in(col: str, values: list[str]) -> str:
+    """``col IN (values)`` over string constants; FALSE when empty."""
+    if not values:
+        return "false"
+    return f"{sql_col(col)} IN ({', '.join(sql_lit(v) for v in values)})"
 
 
 def _merge_term(l: Column, r: Column) -> Column:
@@ -220,20 +241,27 @@ class QueryCompiler:
         self.default_graphs: list[str] | None = None
         self.named_graphs: list[str] | None = None
 
-    def _graph_scope(self, df: DataFrame, graph_ctx) -> DataFrame:
-        """Apply GRAPH context + FROM/FROM NAMED dataset restriction."""
+    def _scan(self, graph_ctx, conds: list[str]) -> DataFrame:
+        """The quads under the GRAPH context and the FROM/FROM NAMED
+        dataset restriction, filtered by ``conds`` (SQL text): one filter
+        operator for the whole conjunction."""
+        df = self.quads
         if isinstance(graph_ctx, IRI):
             if self.named_graphs is not None and graph_ctx.value not in self.named_graphs:
                 return df.limit(0)
-            return df.filter(F.col("g") == graph_ctx.value)
-        if isinstance(graph_ctx, A.Var):
-            df = df.filter(F.col("g").isNotNull())
+            scope = [f"`g` = {sql_lit(graph_ctx.value)}"]
+        elif isinstance(graph_ctx, A.Var):
+            scope = ["`g` IS NOT NULL"]
             if self.named_graphs is not None:
-                df = df.filter(F.col("g").isin(self.named_graphs))
+                scope.append(_sql_in("g", self.named_graphs))
+        elif self.default_graphs is not None:
+            scope = [_sql_in("g", self.default_graphs)]
+        else:
+            scope = []
+        conds = scope + conds
+        if not conds:
             return df
-        if self.default_graphs is not None:
-            return df.filter(F.col("g").isin(self.default_graphs))
-        return df
+        return df.filter(" AND ".join(f"({c})" for c in conds))
 
     # ------------------------------------------------------------------ API
     def compile(self, query) -> DataFrame:
@@ -304,7 +332,7 @@ class QueryCompiler:
 
         # projection
         if q.projections:
-            sel: list[Column] = []
+            sel: list[tuple[str | Column, str]] = []
             names: list[str] = []
             certain: set[str] = set()
             proj_exists = [
@@ -320,7 +348,7 @@ class QueryCompiler:
                 if isinstance(proj, A.Var) and alias is None:
                     name = proj.name
                     col = (
-                        F.col(name) if name in cur.vars else null_struct()
+                        sql_col(name) if name in cur.vars else null_struct()
                     )
                 else:
                     name = alias.name
@@ -336,7 +364,7 @@ class QueryCompiler:
                     )
                     col = ec.compile(proj)
                     alias_map[name] = col
-                sel.append(col.alias(name))
+                sel.append((col, name))
                 names.append(name)
                 if isinstance(proj, A.Var) and proj.name in cur.certain:
                     certain.add(name)
@@ -347,13 +375,13 @@ class QueryCompiler:
             # solutions) — resolve them to their compiled expressions.
             if q.order_by and not (q.distinct or q.reduced):
                 cur = self._order(cur, q.order_by, alias_map)
-            out = Compiled(cur.df.select(*sel), names, certain)
+            out = Compiled(_select(cur.df, sel), names, certain)
         else:  # SELECT * — internal (blank-node) vars are not projectable
             visible = [v for v in cur.var_order if not v.startswith("__bn_")]
             if q.order_by and not (q.distinct or q.reduced):
                 cur = self._order(cur, q.order_by, {})
             out = Compiled(
-                cur.df.select(*[F.col(v) for v in visible]),
+                cur.df.selectExpr(*[sql_col(v) for v in visible]),
                 visible,
                 {v for v in cur.certain if not v.startswith("__bn_")},
             )
@@ -545,7 +573,7 @@ class QueryCompiler:
                 )
                 mixed = (F.col(raw + "_hn") == 1) & (F.col(raw + "_hs") == 1)
                 builders[id(node)] = (
-                    F.when(mixed, null_struct())
+                    F.when(mixed, F.expr(null_struct()))
                     .when(
                         F.col(raw + "_n").isNotNull()
                         & (F.col(raw + "_dt") == XSD + "integer"),
@@ -961,26 +989,20 @@ class QueryCompiler:
         if view_df is None:
             return None
 
-        out = view_df
-        names: list[str] = [svar]
-        sel: list[Column] = [subject_struct(F.col("s")).alias(svar)]
+        conds: list[str] = []
+        sel = [(subject_struct("s"), svar)]
         for tp in attrs:
-            c = F.col(f"`{tp.p.value}`")
+            c = sql_col(tp.p.value)
             if isinstance(tp.o, A.Var):
                 # inner-join semantics: subject must have the predicate
-                out = out.filter(c.isNotNull())
-                names.append(tp.o.name)
-                sel.append(c.alias(tp.o.name))
+                conds.append(f"{c} IS NOT NULL")
+                sel.append((c, tp.o.name))
             else:
-                k = const_struct(tp.o)
-                out = out.filter(
-                    (c["kind"] == k["kind"])
-                    & (c["lex"] == k["lex"])
-                    & c["dtype"].eqNullSafe(k["dtype"])
-                    & c["lang"].eqNullSafe(k["lang"])
-                )
+                conds.append(object_const_filter(tp.o, tp.p.value))
+        out = view_df.filter(" AND ".join(conds)) if conds else view_df
+        names = [n for _, n in sel]
         return Compiled(
-            out.select(*sel), names, set(names),
+            _select(out, sel), names, set(names),
             est_rows=self._star_est(tps),
         )
 
@@ -1014,8 +1036,7 @@ class QueryCompiler:
         Repeated variables turn into post-explode equality filters.
         """
         preds = sorted({tp.p.value for tp in tps})
-        df = self._graph_scope(self.quads, graph_ctx)
-        df = df.filter(F.col("p").isin(preds))
+        conds = [_sql_in("p", preds)]
         # Pre-shuffle filtering (the aggregate otherwise blocks Catalyst's
         # own pushdown): (a) constant-object patterns drop non-matching rows
         # of their predicate at the scan; (b) group FILTER range conjuncts
@@ -1023,8 +1044,6 @@ class QueryCompiler:
         # Both shapes reach parquet as pushed per-column filters; the
         # group-level filter still runs afterwards (idempotent), so this is
         # purely a row-reduction ahead of the shuffle.
-        ops = {"<": Column.__lt__, ">": Column.__gt__,
-               "<=": Column.__le__, ">=": Column.__ge__, "=": Column.__eq__}
         # A predicate's pre-filter must keep every row ANY of its patterns
         # can match: two constant-object patterns on the SAME predicate
         # (``?c a :T1 ; a :T2``) OR together — per-pattern AND filters
@@ -1032,92 +1051,79 @@ class QueryCompiler:
         # predicate shared with a var-object pattern gets no constant/range
         # pre-filter at all (the var pattern needs the full object list;
         # the per-group flag/equality logic below still enforces matches).
-        from collections import defaultdict
+        from collections import Counter, defaultdict
 
         consts_by_pred: dict[str, list] = defaultdict(list)
-        var_preds: set[str] = set()
+        var_preds: Counter = Counter()
         for tp in tps:
             if isinstance(tp.o, A.Var):
-                var_preds.add(tp.p.value)
+                var_preds[tp.p.value] += 1
             else:
                 consts_by_pred[tp.p.value].append(tp.o)
         for pred, consts in consts_by_pred.items():
             if pred in var_preds:
                 continue
-            cond = object_const_filter(consts[0])
-            for c in consts[1:]:
-                cond = cond | object_const_filter(c)
-            df = df.filter(~(F.col("p") == pred) | cond)
-        if pushdown:
-            var_pred_counts: dict[str, int] = {}
-            for tp in tps:
-                if isinstance(tp.o, A.Var):
-                    var_pred_counts[tp.p.value] = (
-                        var_pred_counts.get(tp.p.value, 0) + 1
-                    )
-            for tp in tps:
-                if not isinstance(tp.o, A.Var) or tp.o.name not in pushdown:
-                    continue
-                # range pre-filter only when this pattern is the sole
-                # reader of its predicate
-                if var_pred_counts.get(tp.p.value, 0) != 1 or (
-                    tp.p.value in consts_by_pred
-                ):
-                    continue
-                for op, const in pushdown[tp.o.name]:
-                    df = df.filter(
-                        ~(F.col("p") == tp.p.value)
-                        | ops[op](F.col("o_num"), F.lit(const))
-                    )
+            match = " OR ".join(object_const_filter(c) for c in consts)
+            conds.append(f"NOT (`p` = {sql_lit(pred)}) OR ({match})")
+        for tp in tps:
+            if not isinstance(tp.o, A.Var) or tp.o.name not in (pushdown or {}):
+                continue
+            # range pre-filter only when this pattern is the sole
+            # reader of its predicate
+            if var_preds[tp.p.value] != 1 or tp.p.value in consts_by_pred:
+                continue
+            ranges = " AND ".join(
+                f"`o_num` {op} {sql_lit(const)}"
+                for op, const in pushdown[tp.o.name]
+            )
+            conds.append(f"NOT (`p` = {sql_lit(tp.p.value)}) OR ({ranges})")
+        df = self._scan(graph_ctx, conds)
 
         group_cols = ["s"]
         if isinstance(graph_ctx, A.Var):
             group_cols.append("g")
 
-        aggs: list[Column] = []
+        aggs: list[str] = []
         var_cols: list[tuple[str, str]] = []  # (colname, varname)
-        flag_cols: list[str] = []
+        keep: list[str] = []  # post-aggregate conditions
         for i, tp in enumerate(tps):
-            pred_match = F.col("p") == tp.p.value
+            pred_match = f"`p` = {sql_lit(tp.p.value)}"
             if isinstance(tp.o, A.Var):
                 aggs.append(
-                    F.collect_list(
-                        F.when(pred_match, object_struct())
-                    ).alias(f"_l{i}")
+                    f"collect_list(CASE WHEN {pred_match} THEN "
+                    f"{object_struct()} END) AS `_l{i}`"
                 )
                 var_cols.append((f"_l{i}", tp.o.name))
             else:
                 aggs.append(
-                    F.max(
-                        F.when(pred_match & object_const_filter(tp.o), True)
-                    ).alias(f"_f{i}")
+                    f"max(CASE WHEN {pred_match} AND "
+                    f"{object_const_filter(tp.o)} THEN true END) AS `_f{i}`"
                 )
-                flag_cols.append(f"_f{i}")
-
-        out = df.groupBy(*group_cols).agg(*aggs)
-        for fc in flag_cols:
-            out = out.filter(F.col(fc))
+                keep.append(f"`_f{i}`")
         if isinstance(graph_ctx, A.Var) and graph_ctx.name == svar:
-            out = out.filter(F.col("g") == F.col("s"))
+            keep.append("`g` = `s`")
 
-        names: list[str] = [svar]
-        sel: list[Column] = [subject_struct(F.col("s")).alias(svar)]
+        out = df.groupBy(*group_cols).agg(*[F.expr(a) for a in aggs])
+        if keep:
+            out = out.filter(" AND ".join(keep))
+
+        sel = [(subject_struct("s"), svar)]
         if isinstance(graph_ctx, A.Var) and graph_ctx.name != svar:
-            names.append(graph_ctx.name)
-            sel.append(subject_struct(F.col("g")).alias(graph_ctx.name))
+            sel.append((subject_struct("g"), graph_ctx.name))
+        names = [n for _, n in sel]
         eq_filters: list[tuple[str, str]] = []
-        for i, (lc, vname) in enumerate(var_cols):
-            out = out.withColumn(f"_e{lc}", F.explode(F.col(lc)))
+        for lc, vname in var_cols:
+            out = out.selectExpr("*", f"explode(`{lc}`) AS `_e{lc}`")
             if vname in names:
                 eq_filters.append((f"_e{lc}", vname))
             else:
                 names.append(vname)
-                sel.append(F.col(f"_e{lc}").alias(vname))
-        out = out.select(*sel, *[F.col(c) for c, _ in eq_filters])
-        for c, vname in eq_filters:
-            out = out.filter(F.col(c).eqNullSafe(F.col(vname)))
+                sel.append((f"`_e{lc}`", vname))
+        out = _select(out, sel + [(sql_col(c), c) for c, _ in eq_filters])
         if eq_filters:
-            out = out.select(*names)
+            out = out.filter(" AND ".join(
+                f"{sql_col(c)} <=> {sql_col(v)}" for c, v in eq_filters
+            )).selectExpr(*[sql_col(n) for n in names])
         return Compiled(out, names, set(names), est_rows=self._star_est(tps))
 
     @staticmethod
@@ -1223,7 +1229,7 @@ class QueryCompiler:
             )
 
             scored = bm25_subject_scores(self.quads, query)
-            sel = [subject_struct(F.col("s")).alias(svar)]
+            sel = [F.expr(subject_struct("s")).alias(svar)]
             names = [svar]
             if svar in score_vars:
                 sel.append(
@@ -1287,7 +1293,7 @@ class QueryCompiler:
             )
 
             scored = tfidf_cosine_to_anchor(self.quads, anchor)
-            sel = [subject_struct(F.col("s")).alias(svar)]
+            sel = [F.expr(subject_struct("s")).alias(svar)]
             names = [svar]
             if svar in score_vars:
                 sel.append(
@@ -1344,7 +1350,7 @@ class QueryCompiler:
                 )
             ranks = self._rdf_rank_table()
             sel = [
-                subject_struct(F.col("id")).alias(tp.s.name),
+                F.expr(subject_struct("id")).alias(tp.s.name),
                 make_numeric(F.col("rank").cast("decimal(38,10)")).alias(
                     tp.o.name
                 ),
@@ -1394,7 +1400,7 @@ class QueryCompiler:
                 .select("s")
                 .distinct()
             )
-            sel = [subject_struct(F.col("s")).alias(tp.s.name)]
+            sel = [F.expr(subject_struct("s")).alias(tp.s.name)]
             parts.append(
                 Compiled(matches.select(*sel), [tp.s.name], {tp.s.name})
             )
@@ -1533,8 +1539,8 @@ class QueryCompiler:
             else:
                 raise ValueError(f"unknown path:findPath mode '{mode}'")
             sel = [
-                subject_struct(F.col("h_s")).alias(svar),
-                subject_struct(F.col("h_e")).alias(evar),
+                F.expr(subject_struct("h_s")).alias(svar),
+                F.expr(subject_struct("h_e")).alias(evar),
                 make_numeric(F.col("h_i"), XSD + "integer").alias(ivar),
             ]
             if "pathString" in cfg:
@@ -1555,18 +1561,20 @@ class QueryCompiler:
             # skew-salting rationale in __init__)
             self._class_vars.add(tp.o.name)
 
-        df = self._graph_scope(self.quads, graph_ctx)
-
+        # constant positions: one SQL conjunction on the scan
+        conds: list[str] = []
         if isinstance(tp.p, IRI):
-            df = df.filter(F.col("p") == tp.p.value)
-        position_exprs = {}
+            conds.append(f"`p` = {sql_lit(tp.p.value)}")
+        # var → its term expressions at each position (SQL text, or a
+        # Column for a quoted-pattern component)
+        position_exprs: dict[str, list[str | Column]] = {}
         quoted_filters: list[Column] = []
         if isinstance(tp.s, IRI):
-            df = df.filter(F.col("s") == tp.s.value)
+            conds.append(f"`s` = {sql_lit(tp.s.value)}")
         elif isinstance(tp.s, A.QuotedPattern):
             g = self._qp_ground_term(tp.s)
             if g is not None:
-                df = df.filter(F.col("s") == str(g))
+                conds.append(f"`s` = {sql_lit(str(g))}")
             else:
                 self._quoted_bindings(
                     F.col("s"), tp.s, quoted_filters, position_exprs
@@ -1576,41 +1584,37 @@ class QueryCompiler:
         if isinstance(tp.o, A.QuotedPattern):
             g = self._qp_ground_term(tp.o)
             if g is not None:
-                df = df.filter(object_const_filter(g))
+                conds.append(object_const_filter(g))
             else:
-                from dublin_smart_city_graphdb_spark.model.schema import (
-                    KIND_TRIPLE,
-                )
-
-                df = df.filter(F.col("o_kind") == KIND_TRIPLE)
+                conds.append(f"`o_kind` = {KIND_TRIPLE}")
                 self._quoted_bindings(
                     F.col("o_lex"), tp.o, quoted_filters, position_exprs
                 )
         elif isinstance(tp.o, Term) and not isinstance(tp.o, A.Var):
-            df = df.filter(object_const_filter(tp.o))
+            conds.append(object_const_filter(tp.o))
+        df = self._scan(graph_ctx, conds)
         for qf in quoted_filters:
             df = df.filter(qf)
 
-        sel: list[Column] = []
-        names: list[str] = []
-        conds: list[Column] = []
         if isinstance(tp.s, A.Var):
-            position_exprs.setdefault(tp.s.name, []).append(subject_struct(F.col("s")))
+            position_exprs.setdefault(tp.s.name, []).append(subject_struct("s"))
         if isinstance(tp.p, A.Var):
-            position_exprs.setdefault(tp.p.name, []).append(subject_struct(F.col("p")))
+            position_exprs.setdefault(tp.p.name, []).append(subject_struct("p"))
         if isinstance(tp.o, A.Var):
             position_exprs.setdefault(tp.o.name, []).append(object_struct())
         if isinstance(graph_ctx, A.Var):
             position_exprs.setdefault(graph_ctx.name, []).append(
-                subject_struct(F.col("g"))
+                subject_struct("g")
             )
-        for name, exprs in position_exprs.items():
-            sel.append(exprs[0].alias(name))
-            names.append(name)
-            for other in exprs[1:]:  # same var twice in one pattern
-                conds.append(exprs[0] == other)
-        for c in conds:
-            df = df.filter(c)
+        sel = [(exprs[0], name) for name, exprs in position_exprs.items()]
+        # the same var twice in one pattern: its positions must agree
+        same = [
+            (exprs[0], other)
+            for exprs in position_exprs.values() for other in exprs[1:]
+        ]
+        for a, b in same:
+            df = df.filter(_col(a) == _col(b))
+        names = list(position_exprs)
         # predicate-constant scans are bounded by the load-time stat for
         # that predicate (extra s/o constants only shrink the result)
         est = (
@@ -1618,7 +1622,7 @@ class QueryCompiler:
             if isinstance(tp.p, IRI) and self.predicate_stats
             else None
         )
-        return Compiled(df.select(*sel), names, set(names), est_rows=est)
+        return Compiled(_select(df, sel), names, set(names), est_rows=est)
 
     # -- property paths ------------------------------------------------------
     def _scan_path_pattern(
@@ -1640,7 +1644,7 @@ class QueryCompiler:
             sel.append(F.col("src").alias(s_t.name))
             names.append(s_t.name)
         else:
-            pairs = pairs.filter(F.col("src").eqNullSafe(const_struct(s_t)))
+            pairs = pairs.filter(f"`src` <=> {const_struct(s_t)}")
         if isinstance(o_t, A.Var):
             if isinstance(s_t, A.Var) and o_t.name == s_t.name:
                 pairs = pairs.filter(F.col("src").eqNullSafe(F.col("dst")))
@@ -1648,7 +1652,7 @@ class QueryCompiler:
                 sel.append(F.col("dst").alias(o_t.name))
                 names.append(o_t.name)
         else:
-            pairs = pairs.filter(F.col("dst").eqNullSafe(const_struct(o_t)))
+            pairs = pairs.filter(f"`dst` <=> {const_struct(o_t)}")
         return Compiled(pairs.select(*sel) if sel else pairs.select(), names, set(names))
 
     def _path_pairs_for_endpoints(
@@ -1684,10 +1688,14 @@ class QueryCompiler:
         if not isinstance(path, (A.PathStar, A.PathPlus)):
             return self.compile_path_pairs(path, graph_ctx)
         if s_const:
-            seeds = self.spark.range(1).select(const_struct(s_t).alias("src"))
+            seeds = self.spark.range(1).selectExpr(
+                f"{const_struct(s_t)} AS src"
+            )
             seed_kind = ("const", s_t)
         elif o_const:
-            seeds = self.spark.range(1).select(const_struct(o_t).alias("src"))
+            seeds = self.spark.range(1).selectExpr(
+                f"{const_struct(o_t)} AS src"
+            )
             seed_kind = ("rev-const", o_t)
         else:
             s_seed = var_seed(s_t)
@@ -1724,14 +1732,14 @@ class QueryCompiler:
             # of the scoped graph (same node domain the all-pairs route
             # uses); constants probe with limit(1), variable seed sets
             # semi-join the node frame.
-            df = self._graph_scope(self.quads, graph_ctx)
+            df = self._scan(graph_ctx, [])
             nodes = (
-                df.select(subject_struct(F.col("s")).alias("n"))
-                .unionByName(df.select(object_struct().alias("n")))
+                df.selectExpr(f"{subject_struct('s')} AS n")
+                .unionByName(df.selectExpr(f"{object_struct()} AS n"))
             )
             if seed_kind[0].endswith("const"):
                 present = nodes.filter(
-                    F.col("n").eqNullSafe(const_struct(seed_kind[1]))
+                    f"`n` <=> {const_struct(seed_kind[1])}"
                 ).limit(1)
             else:
                 present = nodes.join(
@@ -1745,13 +1753,13 @@ class QueryCompiler:
         return closed
 
     def compile_path_pairs(self, path, graph_ctx) -> DataFrame:
-        df = self._graph_scope(self.quads, graph_ctx)
+        df = self._scan(graph_ctx, [])
 
         if isinstance(path, A.PathLink):
             return (
-                df.filter(F.col("p") == path.iri)
-                .select(subject_struct(F.col("s")).alias("src"),
-                        object_struct().alias("dst"))
+                df.filter(f"`p` = {sql_lit(path.iri)}")
+                .selectExpr(f"{subject_struct('s')} AS src",
+                            f"{object_struct()} AS dst")
             )
         if isinstance(path, A.PathNeg):
             parts = []
@@ -1760,16 +1768,16 @@ class QueryCompiler:
                 if path.fwd:
                     fwd = fwd.filter(~F.col("p").isin(*path.fwd))
                 parts.append(
-                    fwd.select(subject_struct(F.col("s")).alias("src"),
-                               object_struct().alias("dst"))
+                    fwd.selectExpr(f"{subject_struct('s')} AS src",
+                                   f"{object_struct()} AS dst")
                 )
             if path.has_inv:
                 inv = df
                 if path.inv:
                     inv = inv.filter(~F.col("p").isin(*path.inv))
                 parts.append(
-                    inv.select(object_struct().alias("src"),
-                               subject_struct(F.col("s")).alias("dst"))
+                    inv.selectExpr(f"{object_struct()} AS src",
+                                   f"{subject_struct('s')} AS dst")
                 )
             out = parts[0]
             for p in parts[1:]:
@@ -1813,8 +1821,8 @@ class QueryCompiler:
             if isinstance(path, A.PathPlus):
                 return transitive_closure(inner, "src", "dst")
             nodes = (
-                df.select(subject_struct(F.col("s")).alias("n"))
-                .unionByName(df.select(object_struct().alias("n")))
+                df.selectExpr(f"{subject_struct('s')} AS n")
+                .unionByName(df.selectExpr(f"{object_struct()} AS n"))
                 .distinct()
             )
             identity = nodes.select(F.col("n").alias("src"), F.col("n").alias("dst"))
@@ -1978,11 +1986,10 @@ class QueryCompiler:
                     all_vars.append(v)
         dfs = []
         for br in branches:
-            missing = [v for v in all_vars if v not in br.vars]
-            df = br.df
-            for v in missing:
-                df = df.withColumn(v, null_struct())
-            dfs.append(df.select(*all_vars))
+            dfs.append(_select(br.df, [
+                (sql_col(v) if v in br.vars else null_struct(), v)
+                for v in all_vars
+            ]))
         out = dfs[0]
         for df in dfs[1:]:
             out = out.unionByName(df)
@@ -2010,14 +2017,15 @@ class QueryCompiler:
         unit = self.spark.range(1).select()
         rows_df = None
         for row in vp.rows:
-            sel = [
-                (const_struct(t) if t is not None else null_struct()).alias(n)
+            one = _select(unit, [
+                (const_struct(t) if t is not None else null_struct(), n)
                 for t, n in zip(row, names)
-            ]
-            one = unit.select(*sel)
+            ])
             rows_df = one if rows_df is None else rows_df.unionByName(one)
         if rows_df is None:
-            rows_df = unit.select(*[null_struct().alias(n) for n in names]).limit(0)
+            rows_df = _select(
+                unit, [(null_struct(), n) for n in names]
+            ).limit(0)
         certain = {
             n for i, n in enumerate(names)
             if all(row[i] is not None for row in vp.rows)
@@ -2216,7 +2224,9 @@ class QueryCompiler:
         for tp in q.template:
             def term_col(t):
                 if isinstance(t, A.Var):
-                    return F.col(t.name) if t.name in sol.vars else null_struct()
+                    if t.name in sol.vars:
+                        return F.col(t.name)
+                    return F.expr(null_struct())
                 if isinstance(t, A.QuotedPattern):
                     # CONSTRUCT-star: build the quoted term from the
                     # solution's components (TRIPLE() semantics — invalid
@@ -2229,7 +2239,7 @@ class QueryCompiler:
                         _term_nt,
                     )
                     from dublin_smart_city_graphdb_spark.sparql.termcol import (
-                        _NULL_B, _NULL_N, _NULL_S, _NULL_T, _struct,
+                        _struct,
                     )
 
                     s_, p_, o_ = (
@@ -2246,21 +2256,19 @@ class QueryCompiler:
                     )
                     return F.when(
                         valid,
-                        _struct(F.lit(KIND_TRIPLE), lex, _NULL_S(), _NULL_S(),
-                                _NULL_N(), _NULL_T(), _NULL_B()),
-                    ).otherwise(null_struct())
+                        _struct(F.lit(KIND_TRIPLE), lex),
+                    ).otherwise(F.expr(null_struct()))
                 if isinstance(t, BNode):
                     # template bnodes are FRESH per solution (spec §16.2.1)
                     from dublin_smart_city_graphdb_spark.sparql.termcol import (
-                        _NULL_B, _NULL_N, _NULL_S, _NULL_T, _struct,
+                        _struct,
                     )
 
                     return _struct(
                         F.lit(1),
                         F.concat(F.lit(f"_:{t.label}_"), F.expr("uuid()")),
-                        _NULL_S(), _NULL_S(), _NULL_N(), _NULL_T(), _NULL_B(),
                     )
-                return const_struct(t)
+                return F.expr(const_struct(t))
 
             one = df.select(
                 term_col(tp.s).alias("s"),

@@ -10,6 +10,9 @@ none are Python UDFs.
 
 from __future__ import annotations
 
+import operator
+from decimal import Decimal
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
@@ -19,9 +22,10 @@ from dublin_smart_city_graphdb_spark.model.schema import (
     KIND_LITERAL,
     KIND_TRIPLE,
 )
-from dublin_smart_city_graphdb_spark.model.terms import XSD
+from dublin_smart_city_graphdb_spark.model.terms import XSD, Literal
 from dublin_smart_city_graphdb_spark.sparql import ast as A
 from dublin_smart_city_graphdb_spark.sparql.termcol import (
+    _struct,
     const_struct,
     ebv,
     make_bool,
@@ -128,10 +132,6 @@ def _str_like(src: Column, out: Column) -> Column:
     """String-function result: ``out``'s lexical form carrying ``src``'s
     language tag / xsd:string datatype (§17.4.3 'a string literal ... whose
     language tag and datatype are those of the first argument')."""
-    from dublin_smart_city_graphdb_spark.sparql.termcol import (
-        _NULL_B, _NULL_N, _NULL_T, _struct,
-    )
-
     return _struct(
         F.when(out.isNull(), F.lit(None)).otherwise(F.lit(KIND_LITERAL)),
         out,
@@ -140,7 +140,6 @@ def _str_like(src: Column, out: Column) -> Column:
             F.lit(XSD + "string"),
         ),
         F.when(out.isNotNull(), src["lang"]),
-        _NULL_N(), _NULL_T(), _NULL_B(),
     )
 
 
@@ -174,8 +173,6 @@ def _xsd_cast(dtype_iri: str, a: Column) -> Column:
     space (else error); IRIs cast only to xsd:string. Doubles ride the
     decimal shadow column, so ±INF/NaN lexicals are unsupported (error) —
     consistent with the engine-wide decimal numeric model."""
-    from dublin_smart_city_graphdb_spark.sparql.termcol import _struct
-
     local = dtype_iri.rsplit("#", 1)[-1]
     lex, num, b, ts = _lex(a), _num(a), a["bool"], a["ts"]
     is_str = (a["kind"] == KIND_LITERAL) & (
@@ -187,10 +184,6 @@ def _xsd_cast(dtype_iri: str, a: Column) -> Column:
             F.when(ok, F.lit(KIND_LITERAL)),
             F.when(ok, lex),
             F.when(ok, F.lit(XSD + "string")),
-            F.lit(None).cast("string"),
-            F.lit(None).cast("decimal(38,10)"),
-            F.lit(None).cast("timestamp"),
-            F.lit(None).cast("boolean"),
         )
     if local == "integer":
         # XPath: numeric → truncate toward zero; boolean → 1/0; string must
@@ -297,12 +290,23 @@ def term_eq(a: Column, b: Column) -> Column:
     )
 
 
-def _cmp(op: str, a: Column, b: Column) -> Column:
-    def apply(x: Column, y: Column) -> Column:
-        return {
-            "<": x < y, ">": x > y, "<=": x <= y, ">=": x >= y,
-        }[op]
+_ORDER_OPS = {
+    "<": operator.lt, ">": operator.gt, "<=": operator.le, ">=": operator.ge,
+}
 
+
+def numeric_const(t) -> Decimal | None:
+    """The value of a numeric constant operand, or None: a numeric literal
+    or the negation of one (the parser reads ``-6.27`` as
+    ``UnaryMinus(6.27)``)."""
+    if isinstance(t, A.UnaryMinus):
+        v = numeric_const(t.inner)
+        return None if v is None else -v
+    return t.numeric_value() if isinstance(t, Literal) else None
+
+
+def _cmp(op: str, a: Column, b: Column) -> Column:
+    apply = _ORDER_OPS[op]
     return (
         F.when(
             a.isNull() | b.isNull() | a["kind"].isNull() | b["kind"].isNull(),
@@ -428,25 +432,21 @@ class ExprCompiler:
         the general form yields null (error→dropped), exactly what NULL
         ``num`` gives here — and, unlike CASE WHEN, this shape survives to
         the parquet scan as a pushed row-group filter."""
-        from dublin_smart_city_graphdb_spark.model.terms import Literal
-
-        def num_const(t):
-            return t.numeric_value() if isinstance(t, Literal) else None
-
-        lv, rv = num_const(e.left), num_const(e.right)
+        lv, rv = numeric_const(e.left), numeric_const(e.right)
         if isinstance(e.left, A.Var) and rv is not None:
             a, b = self.compile(e.left)["num"], F.lit(rv)
         elif lv is not None and isinstance(e.right, A.Var):
             a, b = F.lit(lv), self.compile(e.right)["num"]
         else:
             return None
-        return {"<": a < b, ">": a > b, "<=": a <= b, ">=": a >= b}[e.op]
+        return _ORDER_OPS[e.op](a, b)
 
     # -- dispatch -----------------------------------------------------------
     def compile(self, e) -> Column:
         if isinstance(e, A.Var):
             if e.name not in self._scope:
-                return null_struct()  # unbound var → error in expressions
+                # unbound var → error in expressions
+                return F.expr(null_struct())
             return self._resolve(e.name)
         if isinstance(e, (A.OrExpr, A.AndExpr, A.NotExpr)):
             return make_bool(self.compile_bool(e))
@@ -466,11 +466,9 @@ class ExprCompiler:
             # divisor. (Our arithmetic runs on the decimal shadow column,
             # so decimal semantics — error, not xsd:double's INF — apply.)
             out = {
-                "+": x + y,
-                "-": x - y,
-                "*": x * y,
-                "/": F.try_divide(x, y),
-            }[e.op]
+                "+": operator.add, "-": operator.sub, "*": operator.mul,
+                "/": F.try_divide,
+            }[e.op](x, y)
             if e.op == "/":
                 # SPARQL §17.3: integer ÷ integer yields xsd:decimal
                 return make_numeric(out)
@@ -504,7 +502,7 @@ class ExprCompiler:
         if isinstance(e, A.FuncCall):
             return self._func(e)
         if hasattr(e, "value") or hasattr(e, "lex") or hasattr(e, "label"):
-            return const_struct(e)  # IRI / Literal / BNode constant
+            return F.expr(const_struct(e))  # IRI / Literal / BNode constant
         raise ExprError(f"unsupported expression node: {type(e).__name__}")
 
     # -- builtins (SURVEY §2.7) ---------------------------------------------
@@ -535,13 +533,13 @@ class ExprCompiler:
             # SPARQL COALESCE skips *erroring* arguments. Errors are term
             # structs with a null kind (the struct itself is non-null), so
             # F.coalesce would wrongly accept them — test kind explicitly.
-            out = null_struct()
+            out = F.expr(null_struct())
             for a in reversed(args):
                 out = F.when(a["kind"].isNotNull(), a).otherwise(out)
             return out
         if name == "IF":
             c = ebv(args[0])
-            return F.when(c, args[1]).when(~c, args[2]).otherwise(null_struct())
+            return F.when(c, args[1]).when(~c, args[2]).otherwise(F.expr(null_struct()))
         if name == "SAMETERM":
             a, b = args
             return make_bool(
@@ -553,7 +551,7 @@ class ExprCompiler:
             # §17.4.2.5: STR takes a literal or an IRI — a blank node
             # argument is a type error, not its label
             return F.when(
-                args[0]["kind"] == KIND_BLANK, null_struct()
+                args[0]["kind"] == KIND_BLANK, F.expr(null_struct())
             ).otherwise(make_string(_lex(args[0])))
         if name == "LANG":
             return make_string(F.coalesce(args[0]["lang"], F.lit("")))
@@ -584,16 +582,8 @@ class ExprCompiler:
             return make_iri(lex)
         if name == "BNODE":
             lbl = F.concat(F.lit("_:gen"), F.abs(F.hash(F.rand())).cast("string"))
-            return F.struct(
-                F.lit(KIND_BLANK).cast("tinyint").alias("kind"),
-                lbl.alias("lex"),
-                *[F.lit(None).cast(t).alias(n) for n, t in (
-                    ("dtype", "string"), ("lang", "string"),
-                    ("num", "decimal(38,10)"), ("ts", "timestamp"),
-                    ("bool", "boolean"))],
-            )
+            return _struct(F.lit(KIND_BLANK), lbl)
         if name in ("STRDT", "STRLANG"):
-            from dublin_smart_city_graphdb_spark.sparql.termcol import _struct, _NULL_B, _NULL_N, _NULL_S, _NULL_T
             # spec 17.4.2.8/.9: the first argument must be a SIMPLE literal
             # (no language tag, no datatype beyond xsd:string) — a
             # lang-tagged or otherwise-typed input is a type error
@@ -609,11 +599,10 @@ class ExprCompiler:
                     dt.isin(*[XSD + t for t in ("integer", "decimal", "double", "float")]),
                     lex.cast("decimal(38,10)"),
                 )
-                made = _struct(F.lit(KIND_LITERAL), lex, dt, _NULL_S(), num, _NULL_T(), _NULL_B())
+                made = _struct(F.lit(KIND_LITERAL), lex, dt, num=num)
             else:
-                made = _struct(F.lit(KIND_LITERAL), lex, _NULL_S(),
-                               _lex(args[1]), _NULL_N(), _NULL_T(), _NULL_B())
-            return F.when(simple, made).otherwise(null_struct())
+                made = _struct(F.lit(KIND_LITERAL), lex, lang=_lex(args[1]))
+            return F.when(simple, made).otherwise(F.expr(null_struct()))
         if name == "UUID":
             return make_iri(F.concat(F.lit("urn:uuid:"), F.uuid()))
         if name == "STRUUID":
@@ -681,7 +670,7 @@ class ExprCompiler:
                 idx > 0, s.substr(F.lit(1), idx - 1)
             )
             matched = _str_like(args[0], F.coalesce(out, F.lit("")))
-            return F.when(~_lang_compat(args[0], args[1]), null_struct()).when(
+            return F.when(~_lang_compat(args[0], args[1]), F.expr(null_struct())).when(
                 (sep == "") | (idx > 0), matched
             ).otherwise(make_string(F.when(idx == 0, F.lit(""))))
         if name == "STRAFTER":
@@ -691,16 +680,13 @@ class ExprCompiler:
                 idx > 0, s.substr(idx + F.length(sep), F.lit(2_000_000_000))
             )
             matched = _str_like(args[0], F.coalesce(out, F.lit("")))
-            return F.when(~_lang_compat(args[0], args[1]), null_struct()).when(
+            return F.when(~_lang_compat(args[0], args[1]), F.expr(null_struct())).when(
                 (sep == "") | (idx > 0), matched
             ).otherwise(make_string(F.when(idx == 0, F.lit(""))))
         if name == "CONCAT":
             # §17.4.3.12: the result keeps a language tag shared by ALL
             # arguments, is xsd:string when all arguments are xsd:string,
             # and is a simple literal otherwise.
-            from dublin_smart_city_graphdb_spark.sparql.termcol import (
-                _NULL_B, _NULL_N, _NULL_T, _struct,
-            )
 
             if not args:  # CONCAT() — the empty simple literal
                 return make_string(F.lit(""))
@@ -718,7 +704,6 @@ class ExprCompiler:
                 out,
                 F.when(all_xsd & out.isNotNull(), F.lit(XSD + "string")),
                 F.when(same_lang & out.isNotNull(), lang0),
-                _NULL_N(), _NULL_T(), _NULL_B(),
             )
         if name == "ENCODE_FOR_URI":
             # RFC 3986 percent-encoding, not form-encoding: space is %20
@@ -814,9 +799,6 @@ class ExprCompiler:
             # §17.4.5.8: the zone as xsd:dayTimeDuration ("-PT5H",
             # "PT2H30M", Z → "PT0S"); NO timezone is an error (unbound),
             # unlike TZ's empty string (W3C case tz-functions).
-            from dublin_smart_city_graphdb_spark.sparql.termcol import (
-                _NULL_B, _NULL_N, _NULL_T, _struct,
-            )
 
             lex = _lex(args[0])
             sign = F.regexp_extract(lex, r"([+-])\d\d:\d\d$", 1)
@@ -841,7 +823,6 @@ class ExprCompiler:
             return _struct(
                 F.when(dur.isNull(), F.lit(None)).otherwise(F.lit(KIND_LITERAL)),
                 dur, F.when(dur.isNotNull(), F.lit(XSD + "dayTimeDuration")),
-                F.lit(None).cast("string"), _NULL_N(), _NULL_T(), _NULL_B(),
             )
 
         if name == "MD5":
@@ -867,7 +848,7 @@ class ExprCompiler:
             return F.when(
                 t["kind"] == KIND_TRIPLE,
                 nt_text_to_struct(quoted_component(t["lex"], k)),
-            ).otherwise(null_struct())
+            ).otherwise(F.expr(null_struct()))
         if name == "ISTRIPLE":
             t = args[0]
             return make_bool(
@@ -878,7 +859,6 @@ class ExprCompiler:
             # makes the name local to ALL of _func, which silently broke
             # the ISIRI/ISBLANK branches above (UnboundLocalError)
             from dublin_smart_city_graphdb_spark.sparql.protocol import _term_nt
-            from dublin_smart_city_graphdb_spark.sparql.termcol import _struct
 
             s_, p_, o_ = args
             valid = (
@@ -892,13 +872,7 @@ class ExprCompiler:
             )
             return F.when(
                 valid,
-                _struct(
-                    F.lit(KIND_TRIPLE), lex,
-                    F.lit(None).cast("string"), F.lit(None).cast("string"),
-                    F.lit(None).cast("decimal(38,10)"),
-                    F.lit(None).cast("timestamp"),
-                    F.lit(None).cast("boolean"),
-                ),
-            ).otherwise(null_struct())
+                _struct(F.lit(KIND_TRIPLE), lex),
+            ).otherwise(F.expr(null_struct()))
 
         raise ExprError(f"unsupported function {name}")

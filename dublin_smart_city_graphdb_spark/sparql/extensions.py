@@ -973,14 +973,12 @@ _CRS84 = "http://www.opengis.net/def/crs/OGC/1.3/CRS84"
 def _make_wkt(lex: Column) -> Column:
     """WKT string → geo:wktLiteral term (null lex → SPARQL error)."""
     from dublin_smart_city_graphdb_spark.sparql.termcol import (
-        _NULL_B, _NULL_N, _NULL_S, _NULL_T, _struct, null_struct,
+        _struct,
+        null_struct,
     )
 
-    made = _struct(
-        F.lit(2), lex, F.lit(_GEO_NS + "wktLiteral"),
-        _NULL_S(), _NULL_N(), _NULL_T(), _NULL_B(),
-    )
-    return F.when(lex.isNotNull(), made).otherwise(null_struct())
+    made = _struct(F.lit(2), lex, F.lit(_GEO_NS + "wktLiteral"))
+    return F.when(lex.isNotNull(), made).otherwise(F.expr(null_struct()))
 
 
 def _interiors_meet_flat(xa: Column, ya: Column, xb: Column,
@@ -1346,17 +1344,12 @@ def geof_buffer(args: list[Column]) -> Column:
 def geof_get_srid(args: list[Column]) -> Column:
     """geof:getSRID(geom) → xsd:anyURI of the CRS: an embedded
     ``<crs-iri>`` WKT prefix when present, else the CRS84 default."""
-    from dublin_smart_city_graphdb_spark.sparql.termcol import (
-        _NULL_B, _NULL_N, _NULL_S, _NULL_T, _struct,
-    )
+    from dublin_smart_city_graphdb_spark.sparql.termcol import _struct
 
     lex = args[0]["lex"]
     embedded = F.regexp_extract(lex, r"^\s*<([^>]+)>", 1)
     crs = F.when(embedded != "", embedded).otherwise(F.lit(_CRS84))
-    return _struct(
-        F.lit(2), crs, F.lit(XSD + "anyURI"),
-        _NULL_S(), _NULL_N(), _NULL_T(), _NULL_B(),
-    )
+    return _struct(F.lit(2), crs, F.lit(XSD + "anyURI"))
 
 
 # ---------------------------------------------------------------------------

@@ -6,9 +6,29 @@ Term identity = (kind, lex, dtype, lang); the shadow fields are derived from
 (lex, dtype) at load, so whole-struct equality (verified: Spark struct
 equality is null-safe per field) is exactly RDF term identity — one narrow
 join key per shared variable, JVM-side.
+
+How an expression is built depends on its operands:
+
+- Operands that are column NAMES or CONSTANTS become SQL text. The scan
+  helpers (``subject_struct``, ``object_struct``, ``const_struct``,
+  ``null_struct``, ``object_const_filter``) return one SQL string, and
+  the caller hands it to the JVM once, at its DataFrame operator
+  (``selectExpr``, ``filter(str)`` or ``F.expr``). Every constant in that
+  text is rendered by ``sql_lit``, the one quoting helper.
+- Operands that are computed Columns stay on the Column API (``_struct``,
+  the ``make_*`` constructors, ``ebv``, ``sort_keys``).
+
+The reason is round trips: through Py4J every Column-API node (each
+``F.lit``, ``.cast``, ``.alias``, ``F.when``) is one call into the JVM,
+and a single term struct over a column name is a few hundred of them,
+while a SQL string costs one call however large it is.
 """
 
 from __future__ import annotations
+
+import calendar
+import datetime as _dt
+from decimal import Decimal
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column
@@ -31,108 +51,144 @@ from dublin_smart_city_graphdb_spark.model.terms import (
 _DEC = "decimal(38,10)"
 
 
-def _struct(kind, lex, dtype, lang, num, ts, boolean) -> Column:
-    return F.struct(
-        kind.cast("tinyint").alias("kind"),
-        lex.cast("string").alias("lex"),
-        dtype.cast("string").alias("dtype"),
-        lang.cast("string").alias("lang"),
-        num.cast(_DEC).alias("num"),
-        ts.cast("timestamp").alias("ts"),
-        boolean.cast("boolean").alias("bool"),
+# -- SQL text: names and constants --------------------------------------------
+
+def sql_lit(v) -> str:
+    """A Python constant as Spark SQL text — the one quoting helper.
+
+    Strings travel as hex-encoded UTF-8 (``CAST(X'…' AS STRING)``): the
+    text cannot break out of its literal and does not depend on
+    ``spark.sql.parser.escapedStringLiterals``; Catalyst folds the cast
+    to a plain string literal, so the comparison still reaches parquet
+    as a pushed filter. Decimals keep their exact precision and scale
+    (the type ``F.lit`` gives them; a non-finite value is NULL, a SPARQL
+    error). Timestamps are the instant in epoch microseconds (naive
+    values read as UTC)."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, Decimal):
+        if not v.is_finite():
+            return "NULL"
+        text = format(v, "f")
+        digits = text.lstrip("-").replace(".", "").lstrip("0") or "0"
+        scale = len(text.partition(".")[2])
+        prec = max(len(digits), scale, 1)
+        return f"CAST('{text}' AS DECIMAL({min(prec, 38)},{min(scale, 38)}))"
+    if isinstance(v, _dt.datetime):
+        if v.tzinfo is None:
+            v = v.replace(tzinfo=_dt.timezone.utc)
+        micros = calendar.timegm(v.utctimetuple()) * 1_000_000 + v.microsecond
+        return f"timestamp_micros({micros})"
+    if isinstance(v, str):
+        return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
+    raise TypeError(f"no SQL literal for {type(v).__name__}")
+
+
+def sql_col(name: str) -> str:
+    """A column name as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_struct(kind: str, lex: str, dtype: str = "NULL",
+                lang: str = "NULL", num: str = "NULL", ts: str = "NULL",
+                boolean: str = "NULL") -> str:
+    """The term struct over SQL-text fields (omitted fields are NULL)."""
+    return (
+        f"struct(CAST({kind} AS TINYINT) AS kind, CAST({lex} AS STRING) AS lex, "
+        f"CAST({dtype} AS STRING) AS dtype, CAST({lang} AS STRING) AS lang, "
+        f"CAST({num} AS DECIMAL(38,10)) AS num, "
+        f"CAST({ts} AS TIMESTAMP) AS ts, CAST({boolean} AS BOOLEAN) AS bool)"
     )
 
 
-def _NULL_S() -> Column:
-    return F.lit(None).cast("string")
-
-
-def _NULL_N() -> Column:
-    return F.lit(None).cast(_DEC)
-
-
-def _NULL_T() -> Column:
-    return F.lit(None).cast("timestamp")
-
-
-def _NULL_B() -> Column:
-    return F.lit(None).cast("boolean")
-
-
-def subject_struct(col: Column) -> Column:
-    """s/p/g positions hold IRIs, blank labels (``_:``) or — RDF-star —
-    quoted-triple text (``<< ``)."""
+def subject_struct(name: str) -> str:
+    """Term struct of an s/p/g column: IRIs, blank labels (``_:``) or —
+    RDF-star — quoted-triple text (``<< ``)."""
+    c = sql_col(name)
     kind = (
-        F.when(col.startswith("_:"), F.lit(KIND_BLANK))
-        .when(col.startswith("<< "), F.lit(KIND_TRIPLE))
-        .otherwise(F.lit(KIND_IRI))
+        f"CASE WHEN startswith({c}, {sql_lit('_:')}) THEN {KIND_BLANK} "
+        f"WHEN startswith({c}, {sql_lit('<< ')}) THEN {KIND_TRIPLE} "
+        f"ELSE {KIND_IRI} END"
     )
-    return _struct(kind, col, _NULL_S(), _NULL_S(), _NULL_N(), _NULL_T(), _NULL_B())
+    return _sql_struct(kind, c)
 
 
-def object_struct(df_prefix: str = "") -> Column:
-    p = df_prefix
-    return _struct(
-        F.col(p + "o_kind"), F.col(p + "o_lex"), F.col(p + "o_dtype"),
-        F.col(p + "o_lang"), F.col(p + "o_num"), F.col(p + "o_ts"),
-        F.col(p + "o_bool"),
-    )
+def object_struct() -> str:
+    """Term struct of a quads row's object columns."""
+    return _sql_struct(*(
+        sql_col("o_" + f)
+        for f in ("kind", "lex", "dtype", "lang", "num", "ts", "bool")
+    ))
 
 
-def const_struct(term: Term) -> Column:
+def const_struct(term: Term) -> str:
     if isinstance(term, QuotedTriple):
-        return _struct(F.lit(KIND_TRIPLE), F.lit(str(term)), _NULL_S(),
-                       _NULL_S(), _NULL_N(), _NULL_T(), _NULL_B())
+        return _sql_struct(str(KIND_TRIPLE), sql_lit(str(term)))
     if isinstance(term, IRI):
-        return _struct(F.lit(KIND_IRI), F.lit(term.value), _NULL_S(), _NULL_S(),
-                       _NULL_N(), _NULL_T(), _NULL_B())
+        return _sql_struct(str(KIND_IRI), sql_lit(term.value))
     if isinstance(term, BNode):
-        return _struct(F.lit(KIND_BLANK), F.lit(f"_:{term.label}"), _NULL_S(),
-                       _NULL_S(), _NULL_N(), _NULL_T(), _NULL_B())
+        return _sql_struct(str(KIND_BLANK), sql_lit(f"_:{term.label}"))
     lit: Literal = term
-    num = lit.numeric_value()
-    ts = lit.timestamp_value()
-    b = lit.boolean_value()
-    return _struct(
-        F.lit(KIND_LITERAL), F.lit(lit.lex), F.lit(lit.datatype),
-        F.lit(lit.lang),
-        F.lit(num).cast(_DEC) if num is not None else _NULL_N(),
-        F.lit(ts) if ts is not None else _NULL_T(),
-        F.lit(b) if b is not None else _NULL_B(),
+    return _sql_struct(
+        str(KIND_LITERAL), sql_lit(lit.lex), sql_lit(lit.datatype),
+        sql_lit(lit.lang), sql_lit(lit.numeric_value()),
+        sql_lit(lit.timestamp_value()), sql_lit(lit.boolean_value()),
     )
 
 
-def null_struct() -> Column:
-    return _struct(F.lit(None).cast("tinyint"), _NULL_S(), _NULL_S(), _NULL_S(),
-                   _NULL_N(), _NULL_T(), _NULL_B())
+def null_struct() -> str:
+    return _sql_struct("NULL", "NULL")
 
 
-def object_const_filter(term: Term) -> Column:
+def object_const_filter(term: Term, struct_col: str | None = None) -> str:
     """Constant-object pattern match as PER-COLUMN predicates on the quads
     table (term identity = kind+lex+dtype+lang). Column-wise comparisons
     reach the parquet scan as pushed filters with row-group min/max pruning;
-    a whole-struct equality would not push down."""
+    a whole-struct equality would not push down. With ``struct_col`` the
+    fields of that term-struct column are matched instead."""
+    def field(f: str) -> str:
+        if struct_col is None:
+            return sql_col("o_" + f)
+        return f"{sql_col(struct_col)}.{f}"
+
     if isinstance(term, QuotedTriple):
-        return (F.col("o_kind") == KIND_TRIPLE) & (
-            F.col("o_lex") == str(term)
-        )
-    if isinstance(term, IRI):
-        return (F.col("o_kind") == KIND_IRI) & (F.col("o_lex") == term.value)
-    if isinstance(term, BNode):
-        return (F.col("o_kind") == KIND_BLANK) & (
-            F.col("o_lex") == f"_:{term.label}"
-        )
-    lit: Literal = term
-    cond = (F.col("o_kind") == KIND_LITERAL) & (F.col("o_lex") == lit.lex)
-    cond &= (
-        (F.col("o_dtype") == lit.datatype)
-        if lit.datatype
-        else F.col("o_dtype").isNull()
+        kind, lex = KIND_TRIPLE, str(term)
+    elif isinstance(term, IRI):
+        kind, lex = KIND_IRI, term.value
+    elif isinstance(term, BNode):
+        kind, lex = KIND_BLANK, f"_:{term.label}"
+    else:
+        kind, lex = KIND_LITERAL, term.lex
+    cond = f"{field('kind')} = {kind} AND {field('lex')} = {sql_lit(lex)}"
+    if kind == KIND_LITERAL:
+        for f, v in (("dtype", term.datatype), ("lang", term.lang)):
+            cond += f" AND {field(f)} = {sql_lit(v)}" if v else (
+                f" AND {field(f)} IS NULL"
+            )
+    return f"({cond})"
+
+
+# -- Column API: computed operands --------------------------------------------
+
+def _struct(kind, lex, dtype=None, lang=None, num=None, ts=None,
+            boolean=None) -> Column:
+    """The term struct over computed Columns (omitted fields are NULL)."""
+    def c(v):
+        return F.lit(None) if v is None else v
+
+    return F.struct(
+        c(kind).cast("tinyint").alias("kind"),
+        c(lex).cast("string").alias("lex"),
+        c(dtype).cast("string").alias("dtype"),
+        c(lang).cast("string").alias("lang"),
+        c(num).cast(_DEC).alias("num"),
+        c(ts).cast("timestamp").alias("ts"),
+        c(boolean).cast("boolean").alias("bool"),
     )
-    cond &= (
-        (F.col("o_lang") == lit.lang) if lit.lang else F.col("o_lang").isNull()
-    )
-    return cond
 
 
 # -- constructors from computed values --------------------------------------
@@ -150,15 +206,15 @@ def make_numeric(col: Column, dtype: str = XSD + "decimal") -> Column:
     return _struct(
         F.when(col.isNull(), F.lit(None)).otherwise(F.lit(KIND_LITERAL)),
         lex,
-        F.when(col.isNull(), _NULL_S()).otherwise(F.lit(dtype)),
-        _NULL_S(), col, _NULL_T(), _NULL_B(),
+        F.when(col.isNull(), F.lit(None)).otherwise(F.lit(dtype)),
+        num=col,
     )
 
 
 def make_string(col: Column) -> Column:
     return _struct(
         F.when(col.isNull(), F.lit(None)).otherwise(F.lit(KIND_LITERAL)),
-        col, _NULL_S(), _NULL_S(), _NULL_N(), _NULL_T(), _NULL_B(),
+        col,
     )
 
 
@@ -170,17 +226,16 @@ def make_bool(col: Column) -> Column:
     return _struct(
         F.when(col.isNull(), F.lit(None)).otherwise(F.lit(KIND_LITERAL)),
         F.when(col, F.lit("true")).when(~col, F.lit("false")),
-        F.when(col.isNull(), _NULL_S()).otherwise(F.lit(XSD + "boolean")),
-        _NULL_S(),
-        F.when(col, F.lit(1)).when(~col, F.lit(0)).cast(_DEC),
-        _NULL_T(), col,
+        F.when(col.isNull(), F.lit(None)).otherwise(F.lit(XSD + "boolean")),
+        num=F.when(col, F.lit(1)).when(~col, F.lit(0)).cast(_DEC),
+        boolean=col,
     )
 
 
 def make_iri(col: Column) -> Column:
     return _struct(
         F.when(col.isNull(), F.lit(None)).otherwise(F.lit(KIND_IRI)),
-        col, _NULL_S(), _NULL_S(), _NULL_N(), _NULL_T(), _NULL_B(),
+        col,
     )
 
 
@@ -188,8 +243,8 @@ def make_ts(col: Column) -> Column:
     return _struct(
         F.when(col.isNull(), F.lit(None)).otherwise(F.lit(KIND_LITERAL)),
         F.date_format(col, "yyyy-MM-dd'T'HH:mm:ss"),
-        F.when(col.isNull(), _NULL_S()).otherwise(F.lit(XSD + "dateTime")),
-        _NULL_S(), _NULL_N(), col, _NULL_B(),
+        F.when(col.isNull(), F.lit(None)).otherwise(F.lit(XSD + "dateTime")),
+        ts=col,
     )
 
 
@@ -224,18 +279,6 @@ def sort_keys(term: Column) -> list[Column]:
 
 
 # -- RDF-star (quoted triples as terms) --------------------------------------
-
-def quoted_subject_struct(col: Column) -> Column:
-    """s-position struct that also recognizes quoted-triple subjects
-    (lex starts ``<< ``) alongside IRIs and blank labels."""
-    kind = (
-        F.when(col.startswith("<< "), F.lit(KIND_TRIPLE))
-        .when(col.startswith("_:"), F.lit(KIND_BLANK))
-        .otherwise(F.lit(KIND_IRI))
-    )
-    return _struct(kind, col, _NULL_S(), _NULL_S(), _NULL_N(), _NULL_T(),
-                   _NULL_B())
-
 
 def quoted_component(col: Column, k: int) -> Column:
     """Extract component k (1=subject, 2=predicate, 3=object) of a quoted
@@ -336,7 +379,7 @@ def nt_text_to_struct(col: Column) -> Column:
         kind, out_lex,
         F.when(is_lit, dtype),
         F.when(is_lit, lang),
-        F.when(is_lit, num).otherwise(_NULL_N()),
-        F.when(is_lit, ts).otherwise(_NULL_T()),
-        F.when(is_lit, b).otherwise(_NULL_B()),
+        F.when(is_lit, num).otherwise(F.lit(None)),
+        F.when(is_lit, ts).otherwise(F.lit(None)),
+        F.when(is_lit, b).otherwise(F.lit(None)),
     )

@@ -158,8 +158,10 @@ class UpdateExecutor:
         for g, tp in templates:
             def term_struct(t) -> Column:
                 if isinstance(t, A.Var):
-                    return F.col(t.name) if t.name in sol.vars else null_struct()
-                return const_struct(t)
+                    if t.name in sol.vars:
+                        return F.col(t.name)
+                    return F.expr(null_struct())
+                return F.expr(const_struct(t))
 
             s_c = term_struct(tp.s)
             p_c = term_struct(tp.p)

@@ -8,6 +8,7 @@ import json
 import threading
 import time
 import urllib.error
+import urllib.parse
 import urllib.request
 
 import pytest
@@ -189,3 +190,146 @@ def test_commit_reports_in_commit_state(slow_repo):
     assert seen[1] is False
     # monitor drains after the commit lands
     assert eng.running_queries() == []
+
+
+# -- the HTTP endpoint runs under the query timeout and the monitor ----------
+
+def test_http_select_times_out_and_is_listed(slow_repo):
+    """The default JSON SELECT path of the HTTP endpoint runs under the
+    repository's query timeout (its job group is cancelled at the
+    deadline, answered 503) and is listed by the monitor while it runs."""
+    from dublin_smart_city_graphdb_spark.protocol_http import SparqlHttpServer
+
+    eng, repo = slow_repo
+    repo.config["query_timeout"] = 2
+    srv = SparqlHttpServer(eng).start()
+    base = f"http://{srv.host}:{srv.port}"
+    out: dict = {}
+
+    def run():
+        t0 = time.time()
+        url = f"{base}/repositories/monitor_repo?query=" + (
+            urllib.parse.quote(SLOW)
+        )
+        try:
+            with urllib.request.urlopen(url) as r:
+                out["status"] = r.status
+        except urllib.error.HTTPError as ex:
+            out["status"], out["body"] = ex.code, json.loads(ex.read())
+        out["elapsed"] = time.time() - t0
+
+    try:
+        t = threading.Thread(target=run, daemon=True)
+        t.start()
+        _wait_for_running(eng)
+        with urllib.request.urlopen(f"{base}/rest/monitor/query") as r:
+            listing = json.loads(r.read())
+        assert len(listing) == 1 and "COUNT(*)" in listing[0]["query"]
+        t.join(timeout=60)
+        assert not t.is_alive()
+        assert out["status"] == 503, out
+        assert "timeout" in out["body"]["error"]
+        assert out["elapsed"] < 20, out
+        assert eng.running_queries() == []
+    finally:
+        srv.stop()
+
+
+_READS = {
+    "collect": lambda repo: repo.sparql_collect(
+        "SELECT ?s WHERE { ?s <http://t#p1> ?o }"
+    ),
+    "stream": lambda repo: list(repo.sparql_result_chunks(
+        "SELECT ?s WHERE { ?s <http://t#p1> ?o }"
+    )),
+    "graph": lambda repo: list(repo.graph_result_chunks(
+        "CONSTRUCT WHERE { ?s <http://t#p1> ?o }", "application/n-triples"
+    )[0]),
+    "jsonld": lambda repo: repo.sparql_serialized(
+        "CONSTRUCT WHERE { ?s <http://t#p1> ?o }",
+        accept="application/ld+json",
+    ),
+}
+
+
+@pytest.mark.parametrize("path", sorted(_READS))
+def test_compile_counts_against_the_timeout(slow_repo, monkeypatch, path):
+    """Parse and compile run inside the deadline: a compile slower than
+    the timeout raises TimeoutError on every read path."""
+    from dublin_smart_city_graphdb_spark.sparql.compiler import QueryCompiler
+
+    eng, repo = slow_repo
+    repo.sparql_collect("SELECT ?o WHERE { ?s <http://t#p2> ?o }")  # warm
+    repo.config["query_timeout"] = 1
+    compile_ = QueryCompiler.compile
+
+    def slow_compile(self, query):
+        time.sleep(1.5)
+        return compile_(self, query)
+
+    monkeypatch.setattr(QueryCompiler, "compile", slow_compile)
+    with pytest.raises(TimeoutError):
+        _READS[path](repo)
+    assert eng.running_queries() == []
+
+
+def test_jobs_a_compile_starts_past_the_deadline_are_cancelled(
+    slow_repo, monkeypatch
+):
+    """A compile still running at the deadline starts no further work:
+    the Spark job it submits afterwards fails at once instead of running
+    to completion, and the caller gets TimeoutError."""
+    from dublin_smart_city_graphdb_spark.sparql.compiler import QueryCompiler
+
+    eng, repo = slow_repo
+    repo.sparql_collect("SELECT ?o WHERE { ?s <http://t#p2> ?o }")  # warm
+    repo.config["query_timeout"] = 1
+    sc = repo.spark.sparkContext
+    compile_ = QueryCompiler.compile
+
+    def compile_with_late_job(self, query):
+        time.sleep(1.5)
+        sc.parallelize([0], 1).map(
+            lambda x: __import__("time").sleep(60)
+        ).count()
+        return compile_(self, query)
+
+    monkeypatch.setattr(QueryCompiler, "compile", compile_with_late_job)
+    t0 = time.time()
+    with pytest.raises(TimeoutError):
+        repo.sparql_collect("SELECT ?s WHERE { ?s <http://t#p1> ?o }")
+    assert time.time() - t0 < 30
+    assert eng.running_queries() == []
+
+
+def test_guarded_read_keeps_the_callers_job_group(slow_repo):
+    """A read runs in the caller's thread under its own job group and
+    gives the caller's group back afterwards; an empty graph answer is
+    an empty body."""
+    eng, repo = slow_repo
+    sc = repo.spark.sparkContext
+    sc.setJobGroup("caller-group", "caller")
+    try:
+        chunks, _ = repo.graph_result_chunks(
+            "CONSTRUCT WHERE { ?s <http://t#nope> ?o }",
+            "application/n-triples",
+        )
+        assert list(chunks) == []
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+    finally:
+        sc.setJobGroup(None, None)
+    assert eng.running_queries() == []
+
+
+def test_status_tracker_counts_large_job_groups(spark):
+    """The status tracker must see every job of a large group: a cap on
+    retained jobs below the group's size silently under-counts it."""
+    sc = spark.sparkContext
+    group = "test-retained-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        for _ in range(150):
+            sc.parallelize([1], 1).count()
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 150
