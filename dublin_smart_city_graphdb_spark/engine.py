@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from dublin_smart_city_graphdb_spark.inference.rdfsplus import _ID_COLS
 from dublin_smart_city_graphdb_spark.model.schema import INFERRED_GRAPH, QUAD_SCHEMA
 from dublin_smart_city_graphdb_spark.session import local_df
-from dublin_smart_city_graphdb_spark.sources.store import QuadStore
+from dublin_smart_city_graphdb_spark.sources.store import QuadStore, snapshot_stats
 from dublin_smart_city_graphdb_spark.sources.turtle import (
     read_ntriples_distributed,
     turtle_to_rows,
@@ -125,7 +125,9 @@ class Repository:
         # GC a new DataFrame can reuse the freed address and silently
         # serve a stale cached plan/view.)
         self._version: int = 0
-        self._pred_stats: dict[str, int] | None = None
+        # (per-predicate counts, wkt_escape_free) — sources/store
+        # snapshot_stats; dropped on every mutation
+        self._pred_stats: tuple[dict[str, int], bool] | None = None
         self._plan_cache: dict[tuple, DataFrame] = {}
         # Star-view definitions (SURVEY §1.5 fast path): name →
         # (predicates, class_iri). Built lazily per statement-set version.
@@ -725,23 +727,26 @@ class Repository:
             return local_df(self.spark, [], QUAD_SCHEMA)
         return self._quads
 
+    def _snapshot_stats(self) -> tuple[dict[str, int], bool]:
+        """Collected once per statement-set version: read from the store's
+        stats file, else one tiny groupBy job over the quads."""
+        if self._pred_stats is None:
+            stats = self._store.stats() if self._store else ({}, False)
+            if not stats[0]:
+                stats = snapshot_stats(self.quads)
+            self._pred_stats = stats
+        return self._pred_stats
+
     def predicate_stats(self) -> dict[str, int]:
         """Per-predicate row counts for BGP join ordering (the predicate-
-        lists statistics analogue, SURVEY §4.1). Collected once per
-        statement-set version; one tiny groupBy job."""
-        if self._pred_stats is None:
-            if self._store:
-                self._pred_stats = self._store.predicate_stats()
-            if not self._pred_stats:
-                import pyspark.sql.functions as F
+        lists statistics analogue, SURVEY §4.1)."""
+        return self._snapshot_stats()[0]
 
-                self._pred_stats = {
-                    r["p"]: r["n"]
-                    for r in self.quads.groupBy("p")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
-        return self._pred_stats
+    def wkt_escape_free(self) -> bool:
+        """True when no term text of the statement set has a shape the
+        geo predicates send to their DE-9IM escape
+        (sources/store.snapshot_stats)."""
+        return self._snapshot_stats()[1]
 
     def sparql(
         self, query_text: str, include_inferred: bool = True
@@ -781,6 +786,7 @@ class Repository:
             self.spark,
             base,
             predicate_stats=self.predicate_stats(),
+            wkt_escape_free=self.wkt_escape_free(),
             extensions=self.engine.functions,
             services=services,
             # star views are built over the full store; skip the fast path

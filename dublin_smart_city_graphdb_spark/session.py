@@ -59,6 +59,12 @@ def get_spark(
         .config("spark.ui.retainedJobs", "1000")
         .config("spark.ui.retainedStages", "1000")
         .config("spark.ui.retainedTasks", "1000")
+        # PySpark's per-call origin capture: with it on, every Column-API
+        # function run in a thread with an active session also walks the
+        # Python stack and sets and clears the JVM's current origin, a
+        # few extra gateway round trips per call. It only feeds the
+        # Python call site into analysis-error messages.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

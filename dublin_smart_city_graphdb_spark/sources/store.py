@@ -6,7 +6,8 @@ partition-pruned directory reads, so every bound-predicate triple pattern
 touches only its own files. ``g`` is carried as a data column (context index
 analogue); graph-scoped scans get row-group pruning via parquet min/max on a
 low-cardinality column. Per-predicate row counts are collected at write time
-for the BGP join-order heuristic (SURVEY §4.1).
+for the BGP join-order heuristic (SURVEY §4.1), together with the snapshot's
+``wkt_escape_free`` flag (``snapshot_stats``).
 """
 
 from __future__ import annotations
@@ -18,6 +19,27 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from dublin_smart_city_graphdb_spark.model.schema import QUAD_SCHEMA
+
+
+def snapshot_stats(quads: DataFrame) -> tuple[dict[str, int], bool]:
+    """Per-predicate row counts and the ``wkt_escape_free`` flag of a
+    quads snapshot, in one aggregate. The flag is True when no term text
+    (``s``, ``p``, ``o_lex``, ``g``) matches ``WKT_ESCAPE_SHAPE``, so no
+    variable bound by a triple pattern over the snapshot can need the
+    geo predicates' DE-9IM escape (sparql/extensions._sf_predicate)."""
+    from dublin_smart_city_graphdb_spark.sparql.extensions import (
+        WKT_ESCAPE_SHAPE,
+    )
+
+    shaped = F.lit(False)
+    for c in ("s", "p", "o_lex", "g"):
+        shaped = shaped | F.coalesce(
+            F.col(c).rlike(WKT_ESCAPE_SHAPE), F.lit(False)
+        )
+    rows = quads.groupBy("p").agg(
+        F.count(F.lit(1)).alias("n"), F.bool_or(shaped).alias("shaped")
+    ).collect()
+    return {r["p"]: r["n"] for r in rows}, not any(r["shaped"] for r in rows)
 
 
 class QuadStore:
@@ -97,19 +119,25 @@ class QuadStore:
             if self.bucket_subjects
             else self.spark.read.schema(QUAD_SCHEMA).parquet(self.path)
         )
-        stats = {
-            r["p"]: r["n"]
-            for r in src.groupBy("p").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
+        counts, escape_free = snapshot_stats(src)
         with open(self._stats_path, "w") as f:
-            json.dump(stats, f)
+            json.dump({"counts": counts, "wkt_escape_free": escape_free}, f)
 
-    def predicate_stats(self) -> dict[str, int]:
+    def stats(self) -> tuple[dict[str, int], bool]:
+        """``snapshot_stats`` as of the last write. A file of the older
+        format (the bare counts map) carries no flag and reads as
+        "escape possible"; no file reads as an empty store."""
         try:
             with open(self._stats_path) as f:
-                return json.load(f)
+                d = json.load(f)
         except FileNotFoundError:
-            return {}
+            return {}, False
+        if isinstance(d.get("counts"), dict):
+            return d["counts"], bool(d.get("wkt_escape_free"))
+        return d, False
+
+    def predicate_stats(self) -> dict[str, int]:
+        return self.stats()[0]
 
     def compact(self, target_rows_per_file: int = 2_000_000) -> int:
         """Rewrite the store so each predicate partition holds

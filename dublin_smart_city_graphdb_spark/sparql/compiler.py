@@ -117,6 +117,55 @@ def _expr_free_vars(e) -> set:
     return out
 
 
+# AST nodes under which every variable is bound by a triple pattern (or
+# property path) over the scanned quads, or not at all. BIND, VALUES,
+# SERVICE, sub-SELECT and quoted-triple patterns are missing on purpose.
+_SCAN_NODES = (
+    A.Var, Term, A.TriplePattern, A.BGP, A.GroupPattern, A.OptionalPattern,
+    A.UnionPattern, A.MinusPattern, A.GraphGraphPattern,
+    A.PathLink, A.PathInv, A.PathSeq, A.PathAlt, A.PathStar, A.PathPlus,
+    A.PathOpt, A.PathNeg,
+    A.OrExpr, A.AndExpr, A.Compare, A.Arith, A.UnaryMinus, A.NotExpr,
+    A.InExpr, A.FuncCall, A.ExistsExpr, A.Aggregate,
+    A.SelectQuery, A.AskQuery, A.ConstructQuery, A.DescribeQuery,
+)
+# the engine's magic predicates (fts:, sim:, rank:, auto:, path:) bind
+# their variables from computed tables, not from the scan
+_MAGIC_NS = "urn:spark-graft:"
+
+
+def _scan_bound_only(query) -> bool:
+    """True when every variable of ``query`` takes its values from the
+    term columns of the scanned quads: the whole query is built from
+    ``_SCAN_NODES``, with no select expression, no GROUP BY expression
+    and no magic predicate (dataclass walk)."""
+    import dataclasses as _dc
+
+    def ok(n) -> bool:
+        if isinstance(n, (list, tuple)):
+            return all(ok(x) for x in n)
+        if not _dc.is_dataclass(n) or isinstance(n, type):
+            return True
+        if not isinstance(n, _SCAN_NODES):
+            return False
+        if isinstance(n, Term):
+            return True
+        if isinstance(n, A.SelectQuery) and (
+            any(a is not None or not isinstance(v, A.Var)
+                for v, a in n.projections)
+            or not all(isinstance(g, A.Var) for g in n.group_by)
+        ):
+            return False
+        if (
+            isinstance(n, A.TriplePattern) and isinstance(n.p, IRI)
+            and n.p.value.startswith(_MAGIC_NS)
+        ):
+            return False
+        return all(ok(getattr(n, f.name)) for f in _dc.fields(n))
+
+    return ok(query)
+
+
 def _collect_exists(e) -> list:
     """Every ExistsExpr node in an expression tree (document order)."""
     if isinstance(e, A.ExistsExpr):
@@ -200,9 +249,17 @@ class QueryCompiler:
         extensions: dict | None = None,
         services: dict[str, DataFrame] | None = None,
         star_views: list | None = None,
+        wkt_escape_free: bool = False,
     ):
         self.spark = spark
         self.quads = quads
+        # True when no term text of ``quads`` has a shape the geo
+        # predicates send to their DE-9IM escape evaluator (the snapshot
+        # flag kept with the predicate stats). Without it every geo
+        # FILTER keeps the escape.
+        self.wkt_escape_free = wkt_escape_free
+        self._scan_vars = False
+        self._base = ""
         # Materialized property-table views (SURVEY §1.5 fast path):
         # (predicate set, class_iri, wide DataFrame) per view.
         self.star_views = star_views or []
@@ -268,6 +325,7 @@ class QueryCompiler:
         # query BASE: IRI()/URI() resolve runtime relative references
         # against it (parser attaches it to the AST root)
         self._base = getattr(query, "base", "") or ""
+        self._scan_vars = self.wkt_escape_free and _scan_bound_only(query)
         if getattr(query, "from_graphs", None):
             self.default_graphs = list(query.from_graphs)
         if getattr(query, "from_named", None):
@@ -355,12 +413,10 @@ class QueryCompiler:
                     # §18.2.4.4: each (expr AS ?x) EXTENDS the solution, so
                     # later select expressions may reference earlier aliases
                     # — resolve them to their already-compiled columns.
-                    ec = ExprCompiler(
+                    ec = self._ec(
                         lambda n, _m=dict(alias_map): _m.get(n, F.col(n)),
                         cur.vars | set(alias_map),
-                        self.extensions,
                         exists_cols=ecols,
-                        base=getattr(self, "_base", ""),
                     )
                     col = ec.compile(proj)
                     alias_map[name] = col
@@ -411,8 +467,15 @@ class QueryCompiler:
             out = Compiled(out.df.limit(q.limit), out.var_order, out.certain)
         return out
 
+    def _ec(self, resolve, scope, exists_cols=None) -> ExprCompiler:
+        """The expression compiler of this query over ``scope``."""
+        return ExprCompiler(
+            resolve, scope, self.extensions, exists_cols=exists_cols,
+            base=self._base, scan_vars=self._scan_vars,
+        )
+
     def _expr_compiler(self, c: Compiled) -> ExprCompiler:
-        return ExprCompiler(lambda n: F.col(n), c.vars, self.extensions, base=getattr(self, "_base", ""))
+        return self._ec(lambda n: F.col(n), c.vars)
 
     def _order(
         self,
@@ -422,11 +485,9 @@ class QueryCompiler:
     ) -> Compiled:
         """Sort the solution sequence; SELECT-expression aliases resolve to
         their compiled expressions, everything else to solution columns."""
-        ec = ExprCompiler(
+        ec = self._ec(
             lambda n: alias_map[n] if n in alias_map else F.col(n),
             cur.vars | set(alias_map),
-            self.extensions,
-            base=getattr(self, "_base", ""),
         )
         keys: list[Column] = []
         for expr, asc in order_by:
@@ -700,10 +761,8 @@ class QueryCompiler:
                 exists_nodes = _collect_exists(elem.expr)
                 if exists_nodes:
                     df, ecols = self._exists_flags(cur, exists_nodes, graph_ctx)
-                    ec = ExprCompiler(
-                        lambda n: F.col(n), cur.vars, self.extensions,
-                        exists_cols=ecols,
-                        base=getattr(self, "_base", ""),
+                    ec = self._ec(
+                        lambda n: F.col(n), cur.vars, exists_cols=ecols
                     )
                     bound = df.withColumn(name, ec.compile(elem.expr)).select(
                         *cur.var_order, name
@@ -1945,7 +2004,7 @@ class QueryCompiler:
                     return F.col(f"L.{name}")
                 return F.col(f"R.{name}")
 
-            ec = ExprCompiler(resolve, a.vars | b.vars, self.extensions, base=getattr(self, "_base", ""))
+            ec = self._ec(resolve, a.vars | b.vars)
             for fa in filter_asts:
                 cond = cond & F.coalesce(ec.compile_bool(fa), F.lit(False))
         if not shared and how == "inner" and not filter_asts:
@@ -2072,10 +2131,7 @@ class QueryCompiler:
                 return F.col(f"R.{n}__r" if n in shared else f"R.{n}")
             return F.col(f"L.{n}")
 
-        ec = ExprCompiler(
-            resolve, set(cur.vars) | set(inner.vars), self.extensions,
-            base=getattr(self, "_base", ""),
-        )
+        ec = self._ec(resolve, set(cur.vars) | set(inner.vars))
         cond = F.lit(True)
         for cf in correlated:
             cond = cond & ec.compile_bool(cf)
@@ -2119,10 +2175,7 @@ class QueryCompiler:
         """EXISTS / NOT EXISTS as a SUB-expression of a compound FILTER
         (e.g. ``FILTER(EXISTS {...} || ?v = 3)``)."""
         df, exists_cols = self._exists_flags(cur, _collect_exists(flt), graph_ctx)
-        ec = ExprCompiler(
-            lambda n: F.col(n), cur.vars, self.extensions,
-            exists_cols=exists_cols, base=getattr(self, "_base", ""),
-        )
+        ec = self._ec(lambda n: F.col(n), cur.vars, exists_cols=exists_cols)
         out = df.filter(ec.compile_bool(flt)).select(*cur.var_order)
         return Compiled(out, cur.var_order, cur.certain)
 

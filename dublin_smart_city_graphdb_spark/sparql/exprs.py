@@ -330,7 +330,7 @@ class ExprCompiler:
 
     def __init__(
         self, var_resolver, in_scope: set[str], extensions=None,
-        exists_cols=None, base: str = "",
+        exists_cols=None, base: str = "", scan_vars: bool = False,
     ):
         self._resolve = var_resolver  # name -> Column (term struct)
         self._scope = in_scope
@@ -344,6 +344,11 @@ class ExprCompiler:
         # pre-joins each one to a boolean flag column and passes
         # {id(node): column name} — here they read as plain booleans.
         self._exists_cols = exists_cols or {}
+        # True when every variable is bound by triple patterns over a
+        # snapshot whose term texts hold no geo-escape shape (see
+        # QueryCompiler): extension arguments that are bare variables
+        # are then tagged ``__geo_scan__``.
+        self._scan_vars = scan_vars
 
     # -- boolean fast path ---------------------------------------------------
     def compile_bool(self, e) -> Column:
@@ -365,12 +370,16 @@ class ExprCompiler:
             return self._exists_flag(e)
         if isinstance(e, A.FuncCall) and e.name in self._ext:
             # Extension kernels (the geo predicates) can be arbitrarily
-            # large expressions wrapped in a term struct: reading several
-            # struct fields through ebv() would embed one FULL kernel
-            # copy per field (trees, not DAGs — interpreted evaluation
-            # re-runs each copy per row). Bind the struct once through a
-            # one-element transform so ebv's field reads are leaves.
-            return _term_once(self._func(e), ebv)
+            # large expressions wrapped in a term struct. A boolean kernel
+            # filters on its raw boolean (make_bool/ebv). Any other
+            # result would, read field by field through ebv(), embed one
+            # FULL kernel copy per field (trees, not DAGs — interpreted
+            # evaluation re-runs each copy per row): bind the struct once
+            # through a one-element transform so ebv's reads are leaves.
+            t = self._func(e)
+            if hasattr(t, "__raw_bool__"):
+                return ebv(t)
+            return _term_once(t, ebv)
         if isinstance(e, A.Compare):
             if e.op in ("<", ">", "<=", ">="):
                 fast = self._fast_range_cmp(e)
@@ -514,11 +523,16 @@ class ExprCompiler:
             # Tag plan-time-constant literal arguments so kernels can
             # fold them in Python (the geo kernels parse constant WKT
             # once at build instead of per row — HOFs never
-            # constant-fold). The tag rides on the Python Column object;
-            # consumers fall back to the generic column path without it.
+            # constant-fold), and scan-bound variables so the geo
+            # predicates can leave out their DE-9IM escape. The tags ride
+            # on the Python Column object; consumers fall back to the
+            # generic column path without them.
             for a_ast, a_col in zip(e.args, args):
                 lex = getattr(a_ast, "lex", None)
-                if isinstance(lex, str) and not isinstance(a_ast, A.Var):
+                if isinstance(a_ast, A.Var):
+                    if self._scan_vars:
+                        a_col.__geo_scan__ = True
+                elif isinstance(lex, str):
                     a_col.__geo_const__ = lex
             return self._ext[name](args)
 

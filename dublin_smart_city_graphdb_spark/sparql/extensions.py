@@ -20,6 +20,8 @@ per-row interpreted evaluation by roughly the former duplication factor.
 
 from __future__ import annotations
 
+import functools
+import operator
 import re as _re
 
 import pandas as pd
@@ -135,9 +137,25 @@ _WKT_POLYGONAL_BODY = r"^\s*(?:MULTI)?POLYGON\s*\(\s*(.*\S)\s*\)\s*$"
 _WKT_MPOINT_HEAD = r"^\s*MULTIPOINT\s*\("
 # GEOMETRYCOLLECTION member list (non-empty form)
 _WKT_GC_BODY = r"^\s*GEOMETRYCOLLECTION\s*\(\s*(.*\S)\s*\)\s*$"
-# the empty geometry, any head type ("GEOMETRYCOLLECTION EMPTY",
-# "POLYGON EMPTY", ...) with an optional CRS IRI prefix
-_WKT_EMPTY = r"(?i)^\s*(?:<[^>]*>\s*)?[A-Z]+\s+EMPTY\s*$"
+# a WKT head: optional whitespace and an optional CRS IRI prefix
+_WKT_HEAD = r"^\s*(?:<[^>]*>\s*)?"
+# The three shapes the simple-features predicates cannot serve from the
+# JVM kernels (see _sf_predicate): the empty geometry of any head type
+# ("GEOMETRYCOLLECTION EMPTY", "POLYGON EMPTY", ...), a mixed-dimension
+# GEOMETRYCOLLECTION (point or line members), and bare linework.
+_EMPTY_BODY = r"[A-Z]+\s+EMPTY\s*$"
+_MIXED_GC_BODY = r"GEOMETRYCOLLECTION\s*\(.*\b(?:POINT|LINESTRING)\b"
+_LINEY_BODY = r"(?:MULTI)?LINESTRING\b"
+_WKT_EMPTY = r"(?i)" + _WKT_HEAD + _EMPTY_BODY
+_WKT_MIXED_GC = r"(?si)" + _WKT_HEAD + _MIXED_GC_BODY
+_WKT_LINEY = r"(?si)" + _WKT_HEAD + _LINEY_BODY
+# A text matches this iff it matches one of the three above. The
+# repository's snapshot flag (``sources/store.snapshot_stats``) is "no
+# term text matches it".
+WKT_ESCAPE_SHAPE = (
+    r"(?si)" + _WKT_HEAD
+    + f"(?:{_EMPTY_BODY}|{_MIXED_GC_BODY}|{_LINEY_BODY})"
+)
 
 _WKT_LINE_BODY = r"^\s*LINESTRING\s*\(\s*(.*\S)\s*\)\s*$"
 _WKT_MLINE_BODY = r"^\s*MULTILINESTRING\s*\(\s*(.*\S)\s*\)\s*$"
@@ -543,12 +561,15 @@ def _field_col(f: str, lex: Column) -> Column:
 class _G:
     """Bound view of one parsed geometry argument inside a kernel body:
     lookups resolve to lambda-variable fields (row side) or literal
-    columns (constant side) — leaves either way, never a re-parse."""
+    columns (constant side) — leaves either way, never a re-parse.
+    ``pv`` is the constant side's Python parse (``_parse_wkt_py``), so a
+    body can decide its shape at plan time; None on the row side."""
 
-    __slots__ = ("_get",)
+    __slots__ = ("_get", "pv")
 
-    def __init__(self, get):
+    def __init__(self, get, pv: dict | None = None):
         self._get = get
+        self.pv = pv
 
     def __getitem__(self, k: str) -> Column:
         return self._get(k)
@@ -563,11 +584,12 @@ def _geo2_lex(a_lex: Column, b_lex: Column, fa, fb, body,
     struct entirely."""
     lets: dict[str, Column] = {}
     consts: dict[str, Column] = {}
+    pvs: dict[str, dict] = {}
     for lex, const, fields, p in (
         (a_lex, a_const, fa, "a_"), (b_lex, b_const, fb, "b_")
     ):
         if const is not None:
-            pv = _parse_wkt_py(const)
+            pv = pvs[p] = _parse_wkt_py(const)
             for f in fields:
                 c = _field_const(f, pv)
                 # ck is constant-DERIVED but not a literal (HOFs don't
@@ -580,7 +602,8 @@ def _geo2_lex(a_lex: Column, b_lex: Column, fa, fb, body,
 
     def view(p: str, s) -> _G:
         return _G(
-            lambda k: consts[p + k] if (p + k) in consts else s[p + k]
+            lambda k: consts[p + k] if (p + k) in consts else s[p + k],
+            pvs.get(p),
         )
 
     if not lets:
@@ -604,6 +627,7 @@ def _geo1(t: Column, fields, body) -> Column:
     const = getattr(t, "__geo_const__", None)
     lets: dict[str, Column] = {}
     consts: dict[str, Column] = {}
+    pv = None
     if const is not None:
         pv = _parse_wkt_py(const)
         for f in fields:
@@ -614,16 +638,27 @@ def _geo1(t: Column, fields, body) -> Column:
             lets[f] = _field_col(f, t["lex"])
 
     def view(s) -> _G:
-        return _G(lambda k: consts[k] if k in consts else s[k])
+        return _G(lambda k: consts[k] if k in consts else s[k], pv)
 
     if not lets:
         return body(view(None))
     return _let(lets, lambda s: body(view(s)))
 
 
+def _rebind(g: _G, fields, body) -> Column:
+    """Bind more fields of the parsed geometry ``g`` (which must carry
+    ``lex``) for one CASE branch: only the rows that reach the branch
+    parse them. A constant's fields are literals."""
+    if g.pv is not None:
+        return body(_G(lambda k: _field_const(k, g.pv), g.pv))
+    lets = {f: _field_col(f, g["lex"]) for f in fields}
+    return _let(lets, lambda s: body(_G(lambda k: s[k])))
+
+
 # -- kernel bodies over parsed views -----------------------------------------
 
-_PIG_A = ("x", "y", "mp", "mxs", "mys")
+# A's member arrays (mxs/mys) are bound only in the MULTIPOINT branch
+_PIG_A = ("x", "y", "mp", "lex")
 _PIG_B = ("mxs", "mys", "fxs", "fys", "nr", "pb")
 
 
@@ -631,35 +666,59 @@ def _pig_body(ga: _G, gb: _G, all_members: bool = True) -> Column:
     """Nullable boolean: the POINT (or MULTIPOINT, round 7) ``ga`` lies
     in geometry ``gb`` (see geof_sf_within for path semantics).
     MULTIPOINT semantics follow ``all_members``: every member inside
-    (sfWithin/sfContains) or any member inside (sfIntersects)."""
-    xs, ys = gb["mxs"], gb["mys"]
-    nonempty = F.size(xs) > 0
-    xmin, xmax = F.array_min(xs), F.array_max(xs)
-    ymin, ymax = F.array_min(ys), F.array_max(ys)
-    is_rect = (
-        F.forall(xs, lambda v: (v == xmin) | (v == xmax))
-        & F.forall(ys, lambda v: (v == ymin) | (v == ymax))
-        & (gb["nr"] <= 1)
-    )
+    (sfWithin/sfContains) or any member inside (sfIntersects).
+
+    B's shape — empty, bbox test (an axis-aligned rectangle or not
+    polygonal) or ray cast — is a per-row CASE for a row-side B and a
+    plan-time choice for a constant one, which then emits one branch."""
+    if gb.pv is None:
+        xs, ys = gb["mxs"], gb["mys"]
+        nonempty = F.size(xs) > 0
+        xmin, xmax = F.array_min(xs), F.array_max(xs)
+        ymin, ymax = F.array_min(ys), F.array_max(ys)
+        bbox_only = (
+            F.forall(xs, lambda v: (v == xmin) | (v == xmax))
+            & F.forall(ys, lambda v: (v == ymin) | (v == ymax))
+            & (gb["nr"] <= 1)
+        ) | ~gb["pb"]
+    else:
+        xs, ys = gb.pv["mxs"], gb.pv["mys"]
+        if not xs:
+            return F.lit(None).cast("boolean")
+        nonempty = True
+        lo = (min(xs), max(xs), min(ys), max(ys))
+        bbox_only = (
+            all(v in lo[:2] for v in xs) and all(v in lo[2:] for v in ys)
+            and gb.pv["nr"] <= 1
+        ) or not gb.pv["pb"]
+        xmin, xmax, ymin, ymax = (F.lit(v) for v in lo)
 
     def inside_at(xv: Column, yv: Column) -> Column:
         bbox_inside = (
             (xv >= xmin) & (xv <= xmax) & (yv >= ymin) & (yv <= ymax)
         )
+        if bbox_only is True:
+            return bbox_inside
         ray_inside = (
             _crossings_flat(gb["fxs"], gb["fys"], xv, yv) % 2 == 1
         )
-        return F.when(
-            is_rect | ~gb["pb"], bbox_inside
-        ).otherwise(ray_inside)
+        if bbox_only is False:
+            return ray_inside
+        return F.when(bbox_only, bbox_inside).otherwise(ray_inside)
 
-    idx = F.sequence(F.lit(0), F.greatest(F.size(ga["mxs"]) - 1, F.lit(0)))
-    member = lambda i: inside_at(F.get(ga["mxs"], i), F.get(ga["mys"], i))
-    multi = (
-        F.forall(idx, member) if all_members else F.exists(idx, member)
-    ) & (F.size(ga["mxs"]) > 0)
-    single = inside_at(ga["x"], ga["y"])
-    return F.when(nonempty, F.when(ga["mp"], multi).otherwise(single))
+    def multi(m: _G) -> Column:
+        idx = F.sequence(
+            F.lit(0), F.greatest(F.size(m["mxs"]) - 1, F.lit(0))
+        )
+        member = lambda i: inside_at(F.get(m["mxs"], i), F.get(m["mys"], i))
+        return (
+            F.forall(idx, member) if all_members else F.exists(idx, member)
+        ) & (F.size(m["mxs"]) > 0)
+
+    out = F.when(
+        ga["mp"], _rebind(ga, ("mxs", "mys"), multi)
+    ).otherwise(inside_at(ga["x"], ga["y"]))
+    return out if nonempty is True else F.when(nonempty, out)
 
 
 def _point_in_geom(a_lex: Column, b_lex: Column,
@@ -791,7 +850,8 @@ def geof_sf_within(args: list[Column]) -> Column:
     holes via ray-casting, r5 task 5) or any other geometry (tested
     against its bounding box).
 
-    Three JVM-only paths, no UDF anywhere:
+    Three JVM kernel paths (the DE-9IM escape of linework and
+    mixed-collection operands is _sf_predicate's, decided at plan time):
     - geomB a single-ring axis-aligned rectangle POLYGON (every vertex
       lon ∈ {min, max} and lat ∈ {min, max}): CLOSED bbox compare —
       exact, boundary inclusive, the reference's own spatial idiom
@@ -1548,6 +1608,37 @@ def geof_relate(args: list[Column]) -> Column:
     )
 
 
+def _shape(t: Column, pattern: str):
+    """``t["lex"].rlike(pattern)`` for one of the three escape shapes
+    (``_WKT_EMPTY``, ``_WKT_MIXED_GC``, ``_WKT_LINEY``), decided at plan
+    time where it can be: by Python ``re`` for a constant operand
+    (``__geo_const__``; ASCII classes, as java.util.regex has), and
+    False for a scan-bound variable (``__geo_scan__``: no term text of
+    the snapshot matches ``WKT_ESCAPE_SHAPE``). Otherwise the Column."""
+    const = getattr(t, "__geo_const__", None)
+    if const is not None:
+        return _re.search(pattern, const, _re.ASCII) is not None
+    if getattr(t, "__geo_scan__", False):
+        return False
+    return t["lex"].rlike(pattern)
+
+
+def _any(*parts):
+    """OR of plan-time booleans and Columns: a bool when the plan-time
+    parts decide it, else the OR of the Column parts."""
+    if any(p is True for p in parts):
+        return True
+    cols = [p for p in parts if p is not False]
+    return functools.reduce(operator.or_, cols) if cols else False
+
+
+def _when_empty(is_empty, on_empty: bool, out: Column) -> Column:
+    """``out``, except ``on_empty`` where an operand is EMPTY."""
+    if is_empty is False:
+        return out
+    return F.when(is_empty, F.lit(on_empty)).otherwise(out)
+
+
 def _empty_aware(raw_fn, on_empty: bool):
     """Wrap a binary raw-boolean geo predicate with OGC empty-geometry
     semantics: an EMPTY operand (``GEOMETRYCOLLECTION EMPTY`` — e.g. our
@@ -1557,24 +1648,12 @@ def _empty_aware(raw_fn, on_empty: bool):
     boolean CASE composes FIRST and one make_bool wraps the result, so
     downstream EBV extraction sees a single kernel instance."""
     def wrapped(args: list[Column]) -> Column:
-        is_empty = (
-            args[0]["lex"].rlike(_WKT_EMPTY)
-            | args[1]["lex"].rlike(_WKT_EMPTY)
-        )
-        return make_bool(
-            F.when(is_empty, F.lit(on_empty)).otherwise(raw_fn(args))
-        )
+        is_empty = _any(*(_shape(t, _WKT_EMPTY) for t in args[:2]))
+        if is_empty is True:
+            return make_bool(F.lit(on_empty))
+        return make_bool(_when_empty(is_empty, on_empty, raw_fn(args)))
 
     return wrapped
-
-
-# mixed-dimension GEOMETRYCOLLECTION (contains point/line members)
-_WKT_MIXED_GC = (
-    r"(?si)^\s*(?:<[^>]*>\s*)?GEOMETRYCOLLECTION\s*\("
-    r".*\b(?:POINT|LINESTRING)\b"
-)
-# bare linework operand
-_WKT_LINEY = r"(?si)^\s*(?:<[^>]*>\s*)?(?:MULTI)?LINESTRING\b"
 
 
 def _sf_predicate(raw_fn, name: str, line_escape: str | None = None):
@@ -1596,7 +1675,18 @@ def _sf_predicate(raw_fn, name: str, line_escape: str | None = None):
     away on the 99.99% of rows the JVM kernel serves. The UDF inputs are
     now gated to NULL for non-escape rows — the Python side returns
     immediately — and the boolean CASE composes before a single
-    make_bool, so EBV extraction can't duplicate the kernel."""
+    make_bool, so EBV extraction can't duplicate the kernel.
+
+    The escape is decided at plan time (``_shape``): a constant operand
+    is tested in Python, and a variable operand cannot escape when it is
+    bound only by triple patterns over a snapshot whose term texts hold
+    no escape shape (the ``wkt_escape_free`` flag computed with the
+    predicate stats; a query with BIND, VALUES, SERVICE, a sub-SELECT,
+    a select expression or a quoted-triple pattern never qualifies).
+    When neither operand can escape, the plan holds only the JVM kernel
+    and no Python UDF. Compilers that get no flag keep the per-row
+    escape: ``Transaction.query``, the SPARQL gate, the registry,
+    SPARQL UPDATE, SHACL and inference."""
     def wrapped(args: list[Column]) -> Column:
         if name not in _GEO_SETOP_UDFS:
             def pfn(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -1614,22 +1704,33 @@ def _sf_predicate(raw_fn, name: str, line_escape: str | None = None):
                 )
 
             _GEO_SETOP_UDFS[name] = F.pandas_udf(pfn, "boolean")
-        a, b = args[0]["lex"], args[1]["lex"]
-        is_empty = a.rlike(_WKT_EMPTY) | b.rlike(_WKT_EMPTY)
-        escape = a.rlike(_WKT_MIXED_GC) | b.rlike(_WKT_MIXED_GC)
-        if line_escape in ("a", "either"):
-            escape = escape | a.rlike(_WKT_LINEY)
-        if line_escape in ("b", "either"):
-            escape = escape | b.rlike(_WKT_LINEY)
-        esc = F.coalesce(escape, F.lit(False)) & ~F.coalesce(
-            is_empty, F.lit(False)
+        ta, tb = args[0], args[1]
+        is_empty = _any(_shape(ta, _WKT_EMPTY), _shape(tb, _WKT_EMPTY))
+        on_empty = name == "disjoint"
+        if is_empty is True:
+            return make_bool(F.lit(on_empty))
+        escape = _any(
+            _shape(ta, _WKT_MIXED_GC), _shape(tb, _WKT_MIXED_GC),
+            line_escape in ("a", "either") and _shape(ta, _WKT_LINEY),
+            line_escape in ("b", "either") and _shape(tb, _WKT_LINEY),
         )
-        gated = _GEO_SETOP_UDFS[name](F.when(esc, a), F.when(esc, b))
-        return make_bool(
-            F.when(is_empty, F.lit(name == "disjoint"))
-            .when(escape, gated)
-            .otherwise(raw_fn(args))
+        if escape is False:
+            return make_bool(_when_empty(is_empty, on_empty, raw_fn(args)))
+        # UDF inputs are NULL on rows that take another branch
+        gate = []
+        if escape is not True:
+            gate.append(F.coalesce(escape, F.lit(False)))
+        if is_empty is not False:
+            gate.append(~F.coalesce(is_empty, F.lit(False)))
+        a, b = ta["lex"], tb["lex"]
+        if gate:
+            esc = functools.reduce(operator.and_, gate)
+            a, b = F.when(esc, a), F.when(esc, b)
+        gated = _GEO_SETOP_UDFS[name](a, b)
+        out = gated if escape is True else (
+            F.when(escape, gated).otherwise(raw_fn(args))
         )
+        return make_bool(_when_empty(is_empty, on_empty, out))
 
     return wrapped
 

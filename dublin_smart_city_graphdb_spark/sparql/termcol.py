@@ -219,17 +219,27 @@ def make_string(col: Column) -> Column:
 
 
 def make_bool(col: Column) -> Column:
+    """Boolean result → xsd:boolean struct.
+
+    The struct refers to ``col`` six times, so a large boolean kernel
+    (a geo predicate) would be embedded six times in the plan. The
+    returned Column therefore carries ``col`` as ``__raw_bool__``, and
+    ``ebv`` answers with it directly: ``ebv(make_bool(c)) ≡ c`` for every
+    nullable boolean ``c`` (non-null ``c`` is the ``bool`` field; null
+    ``c`` nulls every field, and ebv of that struct is null)."""
     # Null input = SPARQL error: EVERY field must stay null — a bare
     # .otherwise() would stamp lex "false" / num 0 onto error structs,
     # which ebv() then misreads as a bound false (caught by the W3C
     # slice's IF-error case).
-    return _struct(
+    out = _struct(
         F.when(col.isNull(), F.lit(None)).otherwise(F.lit(KIND_LITERAL)),
         F.when(col, F.lit("true")).when(~col, F.lit("false")),
         F.when(col.isNull(), F.lit(None)).otherwise(F.lit(XSD + "boolean")),
         num=F.when(col, F.lit(1)).when(~col, F.lit(0)).cast(_DEC),
         boolean=col,
     )
+    out.__raw_bool__ = col
+    return out
 
 
 def make_iri(col: Column) -> Column:
@@ -252,7 +262,11 @@ def make_ts(col: Column) -> Column:
 
 def ebv(term: Column) -> Column:
     """SPARQL effective boolean value; null = type error (row dropped by
-    FILTER, which is exactly SPARQL's error semantics)."""
+    FILTER, which is exactly SPARQL's error semantics). A ``make_bool``
+    result answers with the boolean it was built from (see there)."""
+    raw = getattr(term, "__raw_bool__", None)
+    if raw is not None:
+        return raw
     return (
         F.when(term.isNull(), F.lit(None).cast("boolean"))
         .when(term["bool"].isNotNull(), term["bool"])

@@ -10,22 +10,32 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def _driver_heap() -> str:
+    """Half the machine's memory, capped at 28g.
+
+    The full suite runs ~700 tests in ONE local-mode JVM (driver =
+    executor = block manager). A heap larger than the machine can back
+    is never collected in time: on a 16 GB machine a 28g heap let the
+    JVM's resident memory reach ~15 GB and the JVM was killed. Half of
+    MemTotal leaves room for the Python workers and the test process."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f
+                      if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "28g"
+    return f"{max(2, min(28, kb // (2 * 1024 * 1024)))}g"
+
+
 @pytest.fixture(scope="session")
 def spark():
     from dublin_smart_city_graphdb_spark.session import get_spark
 
-    # 28g heap: the full suite runs ~500 tests in ONE local-mode JVM
-    # (driver = executor = block manager) and accumulates localCheckpoint
-    # blocks, cached plans and codegen classes; an exhausted heap kills a
-    # daemon thread, and SparkUncaughtExceptionHandler then EXITS the JVM
-    # (observed twice at ~310 tests under 16g: shutdown hooks fired
-    # mid-suite and every later test died with ConnectionRefused). The box
-    # has 125 GiB; size the heap for the suite's growth, not the margin.
     s = get_spark(
         app_name="pytest",
         master="local[8]",
         shuffle_partitions=8,
-        extra_conf={"spark.driver.memory": "28g"},
+        extra_conf={"spark.driver.memory": _driver_heap()},
     )
     yield s
 
